@@ -915,19 +915,19 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = corpus.select(
         F.col("vec_id").alias("vec_a"),
         F.col("v").alias("va"),
-        F.sqrt(_dot(F.col("v"), F.col("v"), dim=_EMB_DIM)).alias("na"),
+        F.sqrt(_dot(F.col("v"), F.col("v"))).alias("na"),
     )
     b = corpus.select(
         F.col("vec_id").alias("vec_b"),
         F.col("v").alias("vb"),
-        F.sqrt(_dot(F.col("v"), F.col("v"), dim=_EMB_DIM)).alias("nb"),
+        F.sqrt(_dot(F.col("v"), F.col("v"))).alias("nb"),
     )
     # The nested-loop stream side inherits the tiny scan's partitioning
     # (1-2 tasks), serializing the O(n^2) compare onto one core; spread
     # it before the join (r7.3 — ~200k-row shuffle at the gate's cap,
     # nothing at scale because this baseline refuses corpus-sized input).
     a = a.repartition(2 * spark.sparkContext.defaultParallelism)
-    cos = _dot(F.col("va"), F.col("vb"), dim=_EMB_DIM) / (
+    cos = _dot(F.col("va"), F.col("vb")) / (
         F.col("na") * F.col("nb")
     )
     # Two-stage threshold (r7.3): the final predicate round(cos,6) >= thr
@@ -974,7 +974,7 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     signed = corpus.select(
         "vec_id",
         "v",
-        F.sqrt(_dot(F.col("v"), F.col("v"), dim=_EMB_DIM)).alias("nv"),
+        F.sqrt(_dot(F.col("v"), F.col("v"))).alias("nv"),
         sigs_of(F.col("v")).alias("sigs"),
     ).persist()  # both self-join sides read this: one UDF pass
     buckets = signed.select(
@@ -1000,7 +1000,7 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # norms ride the bucket rows (computed once per vector in the persisted
     # frame); pair cost is one unrolled dot
-    cos = _dot(F.col("va"), F.col("vb"), dim=_EMB_DIM) / (
+    cos = _dot(F.col("va"), F.col("vb")) / (
         F.col("na") * F.col("nb")
     )
     return (
@@ -1017,7 +1017,6 @@ _EMB_DIM = 64
 def semantic_dedup_flags(
     corpus: DataFrame,
     threshold: float = _EMB_DUP_THRESHOLD,
-    dim: "int | None" = None,
 ) -> DataFrame:
     """SemDeDup core over a (vec_id, label, v: array<double>) frame:
     nearest-centroid cluster assignment (centroids = exact fixed-point
@@ -1060,13 +1059,13 @@ def semantic_dedup_flags(
     # inside the pair join would run the 64-element fold three times per
     # candidate pair (measured 3x the bench cost at sf0.1).
     normed = corpus.withColumn(
-        "nv", F.sqrt(_dot(F.col("v"), F.col("v"), dim=dim))
+        "nv", F.sqrt(_dot(F.col("v"), F.col("v")))
     )
     cent_n = cent.withColumn(
-        "nc", F.sqrt(_dot(F.col("c"), F.col("c"), dim=dim))
+        "nc", F.sqrt(_dot(F.col("c"), F.col("c")))
     )
     cos_c = F.round(
-        _dot(F.col("v"), F.col("c"), dim=dim) / (F.col("nv") * F.col("nc")), 6
+        _dot(F.col("v"), F.col("c")) / (F.col("nv") * F.col("nc")), 6
     )
     # argmax via max(struct(cos, -label)): max cosine, then min label on
     # ties — one partial-aggregating groupBy, no window fan-out.
@@ -1086,7 +1085,7 @@ def semantic_dedup_flags(
     clustered = assign.join(normed, "vec_id").select(
         "vec_id", "cluster", "v", "nv"
     )
-    return intra_cluster_prune(clustered, threshold, dim=dim)
+    return intra_cluster_prune(clustered, threshold)
 
 
 def intra_cluster_prune(
@@ -1335,7 +1334,7 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = e.unionAll(dup).select(
         "vec_id", "label", _dbl("embedding").alias("v")
     )
-    return semantic_dedup_flags(corpus, dim=_EMB_DIM)
+    return semantic_dedup_flags(corpus)
 
 
 @register("dedup_semantic_kmeans", None)  # iterative clusters: rows + floor
@@ -1366,11 +1365,11 @@ def dedup_semantic_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         "cluster",
         "v",
-        F.sqrt(_dot(F.col("v"), F.col("v"), dim=_EMB_DIM)).alias("nv"),
+        F.sqrt(_dot(F.col("v"), F.col("v"))).alias("nv"),
     )
     # checkpoint the (small) flag frame so the floor's count() below and
     # the caller's collect don't each re-execute the pair join
-    out = intra_cluster_prune(clustered, dim=_EMB_DIM).localCheckpoint(
+    out = intra_cluster_prune(clustered).localCheckpoint(
         eager=True
     )
 

@@ -34,17 +34,14 @@ def _dbl(col):
 EMB_DIM = 64
 
 
-def _dot(a, b, dim: int | None = None):
+def _dot(a, b):
     """Sequential-fold dot product over two array<double> columns.
 
     The aggregate(zip_with(...)) fold is the FAST form: an r7 microbench
     over 2M 64-dim rows measured it at ~0.7s vs ~3-5s for a flat
     64-term element_at unrolling (each element_at re-checks bounds/null
     and the deep expression tree falls out of whole-stage codegen), so do
-    NOT "optimize" this into unrolled element_at arithmetic.  ``dim`` is
-    accepted for call-site documentation but does not change the
-    expression."""
-    del dim  # measured slower when used to unroll; see docstring
+    NOT "optimize" this into unrolled element_at arithmetic."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y),
         F.lit(0.0),
@@ -89,20 +86,19 @@ def embedding_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Norms are per-ROW quantities: computing sqrt(dot(x, x)) before the
     # join evaluates each one once instead of once per candidate pair
     # (identical float64 ops in identical order, so cos_sim is bit-equal;
-    # 3 dots/pair -> 1 dot/pair + 1/row).  dim=EMB_DIM unrolls the folds
-    # into flat codegen (see _dot).
+    # 3 dots/pair -> 1 dot/pair + 1/row).
     q = (
         e.filter(F.col("vec_id") < _N_QUERIES)
         .select(F.col("vec_id").alias("query_id"), _dbl("embedding").alias("qe"))
-        .withColumn("qn", F.sqrt(_dot(F.col("qe"), F.col("qe"), dim=EMB_DIM)))
+        .withColumn("qn", F.sqrt(_dot(F.col("qe"), F.col("qe"))))
     )
     base = e.select(
         F.col("vec_id").alias("neighbor_id"), _dbl("embedding").alias("ne")
-    ).withColumn("nn", F.sqrt(_dot(F.col("ne"), F.col("ne"), dim=EMB_DIM)))
+    ).withColumn("nn", F.sqrt(_dot(F.col("ne"), F.col("ne"))))
     j = base.crossJoin(F.broadcast(q)).filter(
         F.col("neighbor_id") != F.col("query_id")
     )
-    cos = _dot(F.col("qe"), F.col("ne"), dim=EMB_DIM) / (
+    cos = _dot(F.col("qe"), F.col("ne")) / (
         F.col("qn") * F.col("nn")
     )
     scored = j.select(
@@ -159,7 +155,7 @@ def _adc_rerank(
     ``rerank`` regardless of how many candidates the buckets produced."""
     # Unrolled asymmetric dot (identical fold order; see _dot): the codes
     # are EMB_DIM int8s, qe is the EMB_DIM query vector.
-    adc = F.col("scale") * _dot(F.col("qe"), F.col("code"), dim=EMB_DIM)
+    adc = F.col("scale") * _dot(F.col("qe"), F.col("code"))
     w_adc = Window.partitionBy("query_id").orderBy(
         F.col("adc_score").desc(), F.col("vec_id")
     )
@@ -177,9 +173,9 @@ def _adc_rerank(
     exact = shortlist.join(
         base.select("vec_id", F.col("v").alias("ne")), "vec_id"
     )
-    cos = _dot(F.col("qe"), F.col("ne"), dim=EMB_DIM) / (
-        F.sqrt(_dot(F.col("qe"), F.col("qe"), dim=EMB_DIM))
-        * F.sqrt(_dot(F.col("ne"), F.col("ne"), dim=EMB_DIM))
+    cos = _dot(F.col("qe"), F.col("ne")) / (
+        F.sqrt(_dot(F.col("qe"), F.col("qe")))
+        * F.sqrt(_dot(F.col("ne"), F.col("ne")))
     )
     scored = exact.select(
         "query_id",
@@ -623,13 +619,13 @@ def embedding_knn_label(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("neighbor_id"),
         F.col("label").alias("label"),
         _dbl("embedding").alias("ne"),
-    ).withColumn("nn", F.sqrt(_dot(F.col("ne"), F.col("ne"), dim=EMB_DIM)))
-    q = q.withColumn("qn", F.sqrt(_dot(F.col("qe"), F.col("qe"), dim=EMB_DIM)))
+    ).withColumn("nn", F.sqrt(_dot(F.col("ne"), F.col("ne"))))
+    q = q.withColumn("qn", F.sqrt(_dot(F.col("qe"), F.col("qe"))))
     j = base.crossJoin(F.broadcast(q)).filter(
         F.col("neighbor_id") != F.col("query_id")
     )
     # per-row norms precomputed pre-join (bit-equal; see embedding_cosine_topk)
-    cos = _dot(F.col("qe"), F.col("ne"), dim=EMB_DIM) / (
+    cos = _dot(F.col("qe"), F.col("ne")) / (
         F.col("qn") * F.col("nn")
     )
     scored = j.select(
@@ -779,12 +775,12 @@ def kmeans_fit(
         # removes a per-iteration BroadcastExchange job.  Measured per
         # fresh-plan iteration at sf0.1/local[32]: broadcast shape
         # 0.9-1.2 s (0.3 s of it the broadcast itself), literal shape
-        # 0.40-0.45 s; embedding_kmeans wall 3.25 s -> ~1.9 s.  nc2 is
-        # recomputed per row as _dot(c, c) — the same left-assoc
-        # sequential fold _fold_sq used driver-side, so distances stay
-        # bit-identical while keeping scalar double literals (which WOULD
-        # inline into codegen source and force a recompile every
-        # iteration) out of the plan.
+        # 0.40-0.45 s; embedding_kmeans wall 3.25 s -> ~1.9 s.  The
+        # squared centroid norm is recomputed per row as _dot(c, c) — the
+        # same left-assoc sequential fold that computes nv2 — instead of
+        # being precomputed driver-side: per-centroid scalar double
+        # literals WOULD inline into codegen source and force a recompile
+        # every iteration.
         # array_min over transform == min distance, ties to the smaller
         # centroid id (struct ordering: d then c_id) — IDENTICAL float ops
         # to the r7.1 static-index least(*k structs) form, but the dist

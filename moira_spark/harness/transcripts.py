@@ -77,10 +77,10 @@ def transcripts_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     input/kept/dropped counts and rule-hit histogram, rows-only.
 
     The real audit table keeps ``rule_hits`` as map<string,long>; here the
-    map is projected to a JSON string (entries already sorted by reason via
-    map_from_entries(sort_array(...)) in job.audit_rows) because the driver's
-    canonicalizer sorts column values in pandas and Python dicts are
-    unhashable.  wall_ms is telemetry and excluded so the check is
+    map is projected to a JSON string (entries already sorted by reason:
+    job.audit_rows builds the map in the sorted ALL_REASONS order) because
+    the driver's canonicalizer sorts column values in pandas and Python
+    dicts are unhashable.  wall_ms is telemetry and excluded so the check is
     deterministic."""
     from moira_spark.job import audit_rows
     from moira_spark.pipeline import run_pipeline

@@ -20,6 +20,7 @@ import time
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from moira_spark import config
 from moira_spark.pipeline import release_cache, run_pipeline
 from moira_spark.sources.tableio import SnapshotTable
 
@@ -35,51 +36,41 @@ def _bucket_of(col, n_buckets: int):
 
 
 def audit_rows(labels: DataFrame, run_id: str, bucket: int, wall_ms: int) -> DataFrame:
-    """Per-(Spark-partition) lineage/metric rows for the audit table."""
-    with_pid = labels.withColumn("partition_id", F.spark_partition_id())
-    base = with_pid.groupBy("partition_id").agg(
-        F.count(F.lit(1)).alias("input_turns"),
-        F.sum(F.when(F.col("keep"), 1).otherwise(0)).cast("long").alias("kept_turns"),
-        F.sum(F.when(~F.col("keep"), 1).otherwise(0))
-        .cast("long")
-        .alias("dropped_turns"),
-        F.countDistinct(F.when(~F.col("conv_keep"), F.col("conv_id"))).alias(
-            "convs_dropped"
-        ),
-    )
-    hits = (
-        with_pid.select("partition_id", F.explode("reasons").alias("reason"))
-        .groupBy("partition_id", "reason")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .groupBy("partition_id")
-        .agg(
-            F.map_from_entries(
-                F.sort_array(F.collect_list(F.struct("reason", "n")))
-            ).alias("rule_hits")
-        )
-    )
-    empty_map = F.map_from_entries(
-        F.array().cast("array<struct<reason:string,n:long>>")
+    """Per-(Spark-partition) lineage/metric rows for the audit table: one
+    aggregate over one scan of ``labels``.  ``rule_hits`` counts each reason
+    with a ``count_if`` (exact because ``reasons`` never repeats a reason)
+    and keeps the non-zero entries, in ``ALL_REASONS`` (sorted) order.  A
+    partition where no rule fired gets an EMPTY map, never NULL: the audit
+    schema declares map<string,long> and downstream map ops (element_at,
+    map_concat) must not hit nulls."""
+    hits = F.create_map(
+        *[
+            e
+            for r in config.ALL_REASONS
+            for e in (F.lit(r), F.count_if(F.array_contains("reasons", r)))
+        ]
     )
     return (
-        base.join(hits, "partition_id", "left")
-        # partitions where no rule fired get an EMPTY map, not NULL — the
-        # audit schema declares map<string,long> and downstream map ops
-        # (element_at, map_concat) must not hit nulls
-        .withColumn("rule_hits", F.coalesce(F.col("rule_hits"), empty_map))
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("snapshot_bucket", F.lit(bucket))
-        .withColumn("wall_ms", F.lit(wall_ms).cast("long"))
+        labels.groupBy(F.spark_partition_id().alias("partition_id"))
+        .agg(
+            F.count(F.lit(1)).alias("input_turns"),
+            F.count_if(F.col("keep")).alias("kept_turns"),
+            F.count_if(~F.col("keep")).alias("dropped_turns"),
+            F.map_filter(hits, lambda _, n: n > 0).alias("rule_hits"),
+            F.countDistinct(F.when(~F.col("conv_keep"), F.col("conv_id"))).alias(
+                "convs_dropped"
+            ),
+        )
         .select(
-            "run_id",
-            "snapshot_bucket",
+            F.lit(run_id).alias("run_id"),
+            F.lit(bucket).alias("snapshot_bucket"),
             "partition_id",
             "input_turns",
             "kept_turns",
             "dropped_turns",
             "rule_hits",
             "convs_dropped",
-            "wall_ms",
+            F.lit(wall_ms).cast("long").alias("wall_ms"),
         )
     )
 

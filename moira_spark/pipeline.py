@@ -159,7 +159,7 @@ def filtered_output(labels: DataFrame, original: DataFrame) -> DataFrame:
     """The 'good' sink: kept turns of kept conversations, scrubbed text.
 
     moira's .qc.good writer analog [M]; the 'bad' side is the complement and
-    the audit table carries the per-partition metrics (sources/audit.py).
+    the audit table carries the per-partition metrics (job.audit_rows).
 
     Fast path: frames produced by run_pipeline carry the pre-projection plan
     (role/tool/ts already attached to every labeled turn), so the sink is a

@@ -19,28 +19,32 @@ run_id is idempotent: the orphan is overwritten, and commit happens once.
 This is exactly Iceberg's optimistic snapshot protocol with run-directory
 granularity instead of per-file manifests (sufficient here because each run
 writes its own directory).  Snapshots also carry Iceberg-style column
-metrics (zone maps): per-run min/max/null-count collected at commit, so
-``read(filters=...)`` and ``merge`` skip whole run dirs whose stats prove
-they cannot match — manifest-level file skipping, the scan-side half of
-what makes a 100 TB table queryable.
+metrics (zone maps): per-FILE min/max/null-count collected at commit, so
+``read(filters=...)`` and ``merge`` skip every run dir none of whose files
+can match, and ``read`` plans only the matching files of the runs it keeps —
+manifest-level file skipping, the scan-side half of what makes a 100 TB
+table queryable.
 
 Concurrency (round 3): snapshot files are created with an atomic
 link-if-absent (full content written to a temp file first, then os.link —
-which fails with FileExistsError when the version already exists).  A commit
-or compaction that loses the race re-reads the fresh snapshot and retries
-with the next version, exactly Iceberg's CAS commit loop; the loser of a
-compact-vs-append race therefore re-folds the appended rows instead of
-silently dropping them.  LATEST is a convenience hint; readers resolve the
-maximum v<N>.json so a stale pointer can never hide a committed snapshot.
+which fails with FileExistsError when the version already exists).  Every
+writer (commit, compact, merge, rollback) publishes through one CAS loop
+(``SnapshotTable._commit``): a writer that loses the race re-reads the
+fresh snapshot and rebuilds its change on top of it, exactly Iceberg's
+commit loop; the loser of a compact-vs-append race therefore re-folds the
+appended rows instead of silently dropping them.  LATEST is a convenience
+hint; readers resolve the maximum v<N>.json so a stale pointer can never
+hide a committed snapshot.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import math
 import os
 import tempfile
-from dataclasses import dataclass, field
+from dataclasses import asdict, dataclass, field, replace
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -53,20 +57,18 @@ class Snapshot:
     run_ids: list[str]
     committed_keys: list[str] = field(default_factory=list)
     row_counts: dict[str, int] = field(default_factory=dict)
-    # Iceberg-style manifest column metrics: per run_id, per column,
-    # {"min":…, "max":…, "nulls": n} for prunable atomic types ({"u": true}
-    # for types stats cannot cover).  A column absent from a run's dict was
-    # not in the run's schema at commit time (schema evolution), so every
-    # row of that run reads NULL there.  Collected by an exact Spark agg at
-    # commit (parquet footer string min/max may be TRUNCATED by writers,
-    # which would make max-based pruning unsound — so footers are not
-    # trusted).  Legacy snapshots (no stats) simply never prune.
-    column_stats: dict[str, dict] = field(default_factory=dict)
-    # Finer grain of the same metrics: per run_id, per FILE basename, the
-    # same {col: entry} dict.  read(filters=...) uses these to plan
-    # individual surviving files within a kept run — with cluster_by
+    # Iceberg-style manifest column metrics (zone maps): per run_id, per
+    # FILE basename, per column, {"min":…, "max":…, "nulls": n} for
+    # prunable atomic types ({"u": true} for types stats cannot cover).  A
+    # column absent from a file's dict was not in the run's schema at
+    # commit time (schema evolution), so every row reads NULL there.
+    # Collected by an exact Spark agg at commit (parquet footer string
+    # min/max may be TRUNCATED by writers, which would make max-based
+    # pruning unsound — so footers are not trusted).  A run is kept by a
+    # filter when at least one of its files may match; with cluster_by
     # (sorted write) the files carry disjoint ranges and a point/range
     # query plans one file of N (Iceberg file-level manifest pruning).
+    # A run without an entry (legacy snapshot) never prunes.
     file_stats: dict[str, dict] = field(default_factory=dict)
     # run_ids whose DATA was folded into a compaction rewrite: no longer
     # read, but their commit is still a fact — is_committed()/commit()
@@ -89,7 +91,8 @@ class Snapshot:
     # O(run-dir) rewrite.
     delete_files: list[dict] = field(default_factory=list)
     # What produced this snapshot: "append" (commit), "compact"
-    # (data-identical rewrite), "merge" (logical rewrite).  Drives
+    # (data-identical rewrite), "merge" (logical rewrite), "rollback"
+    # (state restore).  Drives
     # read_changes(): Iceberg's incremental scan consumes appends, skips
     # data-identical rewrites, and refuses logical rewrites.  None = legacy
     # snapshot written before the field existed (read_changes infers
@@ -105,15 +108,25 @@ class Snapshot:
                 "row_counts": self.row_counts,
                 "retired_run_ids": self.retired_run_ids,
                 "schema_json": self.schema_json,
-                "column_stats": self.column_stats,
                 "file_stats": self.file_stats,
                 "operation": self.operation,
                 "delete_files": self.delete_files,
             }
         )
 
+    def schema(self) -> "StructType | None":
+        """The table schema recorded in this snapshot (None for a legacy
+        snapshot written before schemas were recorded)."""
+        if self.schema_json is None:
+            return None
+        return StructType.fromJson(json.loads(self.schema_json))
+
     @staticmethod
     def from_json(s: str) -> "Snapshot":
+        """Parse a snapshot record.  Keys this reader does not know are
+        ignored — e.g. the run-level column metrics older writers also
+        stored — so tables committed by earlier code still read, resume
+        and commit."""
         d = json.loads(s)
         return Snapshot(
             version=d["version"],
@@ -122,7 +135,6 @@ class Snapshot:
             row_counts=d.get("row_counts", {}),
             retired_run_ids=d.get("retired_run_ids", []),
             schema_json=d.get("schema_json"),
-            column_stats=d.get("column_stats", {}),
             file_stats=d.get("file_stats", {}),
             operation=d.get("operation"),
             delete_files=d.get("delete_files", []),
@@ -136,16 +148,13 @@ class SnapshotConflictError(RuntimeError):
     """Another writer committed this snapshot version first (CAS lost)."""
 
 
-def _evolve_schema(prev_json: str | None, staged: "StructType") -> str:
+def _evolve_schema(prev: "StructType | None", staged: "StructType") -> str:
     """Iceberg-style additive schema evolution: fields are matched by name,
     new fields append, and a same-name type change is refused (Iceberg only
     allows safe type promotions; this emulation allows none).  Returns the
     merged schema as StructType JSON for the snapshot record."""
-    from pyspark.sql.types import StructType
-
-    if prev_json is None:
+    if prev is None:
         return staged.json()
-    prev = StructType.fromJson(json.loads(prev_json))
     by_name = {f.name: f for f in prev.fields}
     merged = list(prev.fields)
     for f in staged.fields:
@@ -229,15 +238,15 @@ def _stats_entry(mn, mx, nulls, kind: str = "plain", us=None) -> dict:
     return {"min": mn, "max": mx, "nulls": nulls}
 
 
-def _collect_stats(df: DataFrame) -> tuple[int, dict, dict]:
+def _collect_stats(df: DataFrame) -> tuple[int, dict]:
     """One grouped agg pass over a staged run: per-FILE min/max/null-count
     for every stats-supported column (the per-file metrics an Iceberg
-    writer emits into the manifest), folded driver-side into run-level
-    stats.  The collect is bounded by the run's FILE count, never rows.
-    Unsupported types record ``{"u": true}`` (present-but-unprunable —
-    distinct from ABSENT, which means the column was not in the run's
-    schema at all).  Returns ``(rows, run_stats, file_stats)`` with
-    file_stats keyed by file basename."""
+    writer emits into the manifest).  The collect is bounded by the run's
+    FILE count, never rows.  Unsupported types record ``{"u": true}``
+    (present-but-unprunable — distinct from ABSENT, which means the column
+    was not in the run's schema at all).  Returns ``(rows, file_stats)``
+    with file_stats keyed by file basename; a file without rows gets no
+    entry (it holds nothing a filter could match)."""
     from urllib.parse import unquote, urlparse
 
     aggs = [F.count(F.lit(1)).alias("__n")]
@@ -278,32 +287,7 @@ def _collect_stats(df: DataFrame) -> tuple[int, dict, dict]:
             if f0.name not in ent:
                 ent[f0.name] = {"u": True}
         file_stats[os.path.basename(unquote(urlparse(r["__f"]).path))] = ent
-    run_stats: dict[str, dict] = {}
-    for f0 in df.schema.fields:
-        ents = [fs[f0.name] for fs in file_stats.values()]
-        if not ents:
-            continue  # empty run: no files grouped, no stats to fold
-        if any(e.get("u") for e in ents):
-            run_stats[f0.name] = {"u": True}
-            continue
-        mins = [e["min"] for e in ents if e["min"] is not None]
-        maxs = [e["max"] for e in ents if e["max"] is not None]
-        us_lo = [e["us"][0] for e in ents if e.get("us")]
-        us_hi = [e["us"][1] for e in ents if e.get("us")]
-        run_stats[f0.name] = {
-            "min": min(mins) if mins else None,
-            "max": max(maxs) if maxs else None,
-            "nulls": sum(e["nulls"] for e in ents),
-            **({"ts": True} if ents[0].get("ts") else {}),
-            # fold the epoch-micros twin only when EVERY non-null file
-            # carries it — a partial fold would understate the range
-            **(
-                {"us": [min(us_lo), max(us_hi)]}
-                if us_lo and len(us_lo) == len(mins)
-                else {}
-            ),
-        }
-    return rows, run_stats, file_stats
+    return rows, file_stats
 
 
 _Z_BITS = 8  # 256 buckets/dim up to 7 dims; above that bits shrink so the
@@ -319,8 +303,8 @@ def _zvalue(df: DataFrame, cols: "list[str]", bits: int = _Z_BITS,
 
     Bounds come from ``bounds`` (``{col: (lo, hi)}`` floats in the same
     numeric space as the probe — see ``_zbounds_from_snapshot``) when the
-    caller already knows them (compaction has the snapshot's column
-    stats); columns without provided bounds fall back to one min/max
+    caller already knows them (compaction has the snapshot's zone maps);
+    columns without provided bounds fall back to one min/max
     aggregation — an output-tiny but INPUT-full scan, worth skipping on a
     100 TB rewrite.
 
@@ -394,15 +378,14 @@ def _zvalue(df: DataFrame, cols: "list[str]", bits: int = _Z_BITS,
 def _zbounds_from_snapshot(
     snap: "Snapshot", cols: "list[str]"
 ) -> "dict[str, tuple]":
-    """Fold a snapshot's per-run column stats into ``{col: (lo, hi)}`` in
+    """Fold a snapshot's per-file zone maps into ``{col: (lo, hi)}`` in
     _zvalue's probe space (floats; timestamps as unix micros; strings as
-    the 8-byte big-endian prefix ordinal).  Columns any run lacks stats
-    for are omitted — _zvalue falls back to aggregating just those."""
+    the 8-byte big-endian prefix ordinal).  Columns any file lacks stats
+    for (or every column, when a run has no per-file stats) are omitted —
+    _zvalue falls back to aggregating just those."""
     import datetime as _dt
 
     def to_probe(v, ts: bool):
-        if v is None:
-            return None
         if ts:
             # fallback for pre-"us" snapshots: interpret the stored naive
             # wall clock as UTC — the same convention the unix_micros
@@ -418,27 +401,25 @@ def _zbounds_from_snapshot(
             )
         return float(v)
 
+    if any(r not in snap.file_stats for r in snap.run_ids):
+        return {}
     out: dict = {}
     for c in cols:
-        lo = hi = None
-        ok = True
-        for r in snap.run_ids:
-            ent = (snap.column_stats.get(r) or {}).get(c)
-            if not ent or ent.get("u"):
-                ok = False  # unknown bounds somewhere: fall back to a scan
-                break
-            if ent.get("min") is None:
-                continue  # all-NULL run: contributes no non-null values
-            if ent.get("us"):
-                # exact epoch-micros bounds recorded JVM-side at commit
-                a, b = float(ent["us"][0]), float(ent["us"][1])
-            else:
-                a = to_probe(ent["min"], ent.get("ts", False))
-                b = to_probe(ent["max"], ent.get("ts", False))
-            lo = a if lo is None else min(lo, a)
-            hi = b if hi is None else max(hi, b)
-        if ok and lo is not None:
-            out[c] = (lo, hi)
+        ents = [
+            st.get(c) for r in snap.run_ids for st in snap.file_stats[r].values()
+        ]
+        if any(not e or e.get("u") for e in ents):
+            continue  # unknown bounds somewhere: fall back to a scan
+        spans = [
+            # exact epoch-micros bounds recorded JVM-side at commit
+            (float(e["us"][0]), float(e["us"][1])) if e.get("us")
+            else (to_probe(e["min"], e.get("ts", False)),
+                  to_probe(e["max"], e.get("ts", False)))
+            for e in ents
+            if e["min"] is not None  # all-NULL file: no non-null values
+        ]
+        if spans:
+            out[c] = (min(a for a, _ in spans), max(b for _, b in spans))
     return out
 
 
@@ -458,17 +439,16 @@ def _normalize_filter(flt) -> tuple[str, str, object]:
     return col, op, (flt[2] if len(flt) > 2 else None)
 
 
-def _run_provably_empty(run_stats: "dict | None", filters) -> bool:
-    """True only when zone-map stats PROVE no row of the run can satisfy the
-    conjunctive ``filters``.  Anything unprovable keeps the run — pruning is
-    an optimization; the residual filter re-applies exact semantics."""
-    if run_stats is None:
-        return False  # legacy snapshot committed before stats existed
+def _provably_empty(stats: dict, filters) -> bool:
+    """True only when one file's zone-map ``stats`` PROVE none of its rows
+    can satisfy the conjunctive ``filters``.  Anything unprovable keeps the
+    file — pruning is an optimization; the residual filter re-applies exact
+    semantics."""
     for flt in filters:
         col, op, val = _normalize_filter(flt)
-        ent = run_stats.get(col)
+        ent = stats.get(col)
         if ent is None:
-            # Column absent from the run's schema at commit time: schema
+            # Column absent from the file's schema at commit time: schema
             # evolution reads it back all-NULL, which no non-null-matching
             # predicate can satisfy.
             if op in _NONNULL_OPS:
@@ -481,7 +461,7 @@ def _run_provably_empty(run_stats: "dict | None", filters) -> bool:
             if nulls == 0:
                 return True
             continue
-        if mn is None:  # zero non-null values in this run
+        if mn is None:  # zero non-null values in this file
             return True  # op is in _NONNULL_OPS here
         if op == "is_not_null":
             continue
@@ -526,10 +506,20 @@ def _run_provably_empty(run_stats: "dict | None", filters) -> bool:
     return False
 
 
+def _run_may_match(fstats: "dict | None", filters) -> bool:
+    """A run is kept when at least one of its files may match.  A run
+    without per-file stats (legacy snapshot) is always kept; a run whose
+    files hold no rows never is."""
+    return fstats is None or any(
+        not _provably_empty(st, filters) for st in fstats.values()
+    )
+
+
 def _filters_to_expr(filters):
     """The same conjuncts as a Spark Column (residual filter): pruning only
-    removes whole runs, this re-applies exact row-level semantics — and the
-    simple comparisons push down into the parquet scan as PushedFilters."""
+    removes whole runs and files, this re-applies exact row-level semantics
+    — and the simple comparisons push down into the parquet scan as
+    PushedFilters."""
     expr = None
     for flt in filters:
         col, op, val = _normalize_filter(flt)
@@ -695,55 +685,22 @@ class SnapshotTable:
         df.write.mode("overwrite").parquet(path)
         return path
 
-    def commit(
-        self,
-        spark: SparkSession,
-        run_id: str,
-        committed_keys: list[str] | None = None,
-    ) -> Snapshot:
-        """Fold the staged run into a new snapshot (no-op if committed).
-
-        CAS-retries on snapshot conflict: if another writer commits between
-        our read and our write, re-read the fresh snapshot (which may
-        already contain this run_id — then it is a no-op) and try the next
-        version."""
-        rows = None
-        run_stats = None
-        run_fstats = None
-        staged_schema = None
+    def _commit(self, what: str, operation: str, done, changes) -> Snapshot:
+        """The one snapshot-commit path, shared by every writer: Iceberg's
+        optimistic CAS loop.  Each attempt reads the latest snapshot (an
+        empty version 0 when the table is new); ``done(prev)`` is the
+        writer's idempotency check and returns ``prev`` unchanged when it
+        holds; otherwise the next version is ``prev`` with ``operation``
+        and the fields ``changes(prev)`` returns.  Losing the version race
+        to another writer re-runs the attempt on the fresh snapshot, so
+        whatever that writer committed is built upon, never dropped."""
         for _ in range(_CAS_RETRIES):
-            prev = self.latest_snapshot()
-            if prev is not None and (
-                run_id in prev.run_ids or run_id in prev.retired_run_ids
-            ):
-                return prev  # idempotent re-commit (incl. compaction-retired)
-            if rows is None:  # staged data is fixed; scan once
-                staged = spark.read.parquet(self.staged_dir(run_id))
-                rows, run_stats, run_fstats = _collect_stats(staged)
-                staged_schema = staged.schema
-            snap = Snapshot(
-                version=(prev.version + 1) if prev else 1,
-                run_ids=(prev.run_ids if prev else []) + [run_id],
-                committed_keys=sorted(
-                    set(prev.committed_keys if prev else [])
-                    | set(committed_keys or [])
-                ),
-                row_counts={**(prev.row_counts if prev else {}), run_id: rows},
-                retired_run_ids=(prev.retired_run_ids if prev else []),
-                schema_json=_evolve_schema(
-                    prev.schema_json if prev else None, staged_schema
-                ),
-                column_stats={
-                    **(prev.column_stats if prev else {}),
-                    run_id: run_stats,
-                },
-                file_stats={
-                    **(prev.file_stats if prev else {}),
-                    run_id: run_fstats,
-                },
-                # outstanding equality deletes apply to PRIOR runs only
-                # (applies_to pins them), so an append carries them as-is
-                delete_files=list(prev.delete_files) if prev else [],
+            prev = self.latest_snapshot() or Snapshot(version=0, run_ids=[])
+            if done(prev):
+                return prev
+            snap = replace(
+                prev, version=prev.version + 1, operation=operation,
+                **changes(prev),
             )
             try:
                 self._write_snapshot(snap)
@@ -751,8 +708,52 @@ class SnapshotTable:
             except SnapshotConflictError:
                 continue
         raise SnapshotConflictError(
-            f"commit of run {run_id!r} lost {_CAS_RETRIES} CAS races; "
+            f"{what} lost {_CAS_RETRIES} CAS races; "
             "a writer is livelocking this table"
+        )
+
+    def _stage_stats(
+        self, spark: SparkSession, run_id: str, df: DataFrame | None = None,
+        **stage_kw,
+    ) -> tuple[int, dict, StructType]:
+        """Stage ``df`` as ``run_id`` (when given; see :meth:`stage`), then
+        one stats pass over the staged files: ``(rows, file_stats,
+        schema)``."""
+        if df is not None:
+            self.stage(df, run_id, **stage_kw)
+        staged = spark.read.parquet(self.staged_dir(run_id))
+        return (*_collect_stats(staged), staged.schema)
+
+    def commit(
+        self,
+        spark: SparkSession,
+        run_id: str,
+        committed_keys: list[str] | None = None,
+    ) -> Snapshot:
+        """Fold the staged run into a new snapshot (no-op if committed,
+        including a run a compaction or merge has since retired).  A lost
+        CAS race re-checks the fresh snapshot, which may already contain
+        this run_id, and otherwise appends on top of it."""
+        staged = functools.cache(lambda: self._stage_stats(spark, run_id))
+
+        def append(prev: Snapshot) -> dict:
+            rows, fstats, schema = staged()  # staged data is fixed: scan once
+            # delete_files carry over as-is: outstanding equality deletes
+            # apply to PRIOR runs only (applies_to pins them)
+            return dict(
+                run_ids=prev.run_ids + [run_id],
+                committed_keys=sorted(
+                    set(prev.committed_keys) | set(committed_keys or [])
+                ),
+                row_counts={**prev.row_counts, run_id: rows},
+                schema_json=_evolve_schema(prev.schema(), schema),
+                file_stats={**prev.file_stats, run_id: fstats},
+            )
+
+        return self._commit(
+            f"commit of run {run_id!r}", "append",
+            lambda prev: run_id in prev.run_ids + prev.retired_run_ids,
+            append,
         )
 
     # ---------------------------------------------------------- maintenance
@@ -786,20 +787,19 @@ class SnapshotTable:
         is_committed(run_id) — still treat finished work as done); prior
         snapshots still time-travel until vacuum() expires their data.
 
-        CAS-retries on snapshot conflict: a commit landing between the
-        snapshot read and the snapshot write (e.g. a live foreachBatch
-        micro-batch — the exact workload compaction targets) makes the
-        version-file link fail, and the WHOLE rewrite restarts from the
-        fresh snapshot so the newly appended rows are folded in rather
-        than silently dropped.
+        A commit landing between the snapshot read and the snapshot write
+        (e.g. a live foreachBatch micro-batch — the exact workload
+        compaction targets) loses this writer the CAS race, and the WHOLE
+        rewrite restarts from the fresh snapshot so the newly appended
+        rows are folded in rather than silently dropped.
         """
         if zorder and (not cluster_by or len(cluster_by) < 2):
             raise ValueError(
                 "compact(zorder=True) needs >= 2 cluster_by columns"
             )
-        for _ in range(_CAS_RETRIES):
-            prev = self.latest_snapshot()
-            if prev is None or not prev.run_ids:
+
+        def rewrite(prev: Snapshot) -> dict:
+            if not prev.run_ids:
                 raise ValueError("nothing to compact: no committed snapshot")
             # Per-attempt nonce: two compactors racing from the same base
             # version must stage into DIFFERENT directories — with a shared
@@ -815,25 +815,18 @@ class SnapshotTable:
             # carries no delete_files and readers stop paying the
             # anti-joins
             df = self.read(spark, version=prev.version)
-            if cluster_by:
-                self.stage(
-                    df,
-                    run_id,
-                    cluster_by=cluster_by,
-                    cluster_partitions=target_partitions,
-                    zorder=zorder,
-                    # the snapshot already knows every column's bounds: a
-                    # z-ordered rewrite must not pay an extra full scan
-                    zorder_bounds=(
-                        _zbounds_from_snapshot(prev, cluster_by)
-                        if zorder
-                        else None
-                    ),
-                )
-            else:
-                self.stage(df.repartition(target_partitions), run_id)
-            rows, run_stats, run_fstats = _collect_stats(
-                spark.read.parquet(self.staged_dir(run_id))
+            rows, fstats, _ = self._stage_stats(
+                spark,
+                run_id,
+                df if cluster_by else df.repartition(target_partitions),
+                cluster_by=cluster_by,
+                cluster_partitions=target_partitions,
+                zorder=zorder,
+                # the snapshot already knows every column's bounds: a
+                # z-ordered rewrite must not pay an extra full scan
+                zorder_bounds=(
+                    _zbounds_from_snapshot(prev, cluster_by) if zorder else None
+                ),
             )
             # with outstanding equality deletes the run row-counts are an
             # overcount (deleted rows still sit in their files), so the
@@ -847,28 +840,17 @@ class SnapshotTable:
                 raise RuntimeError(
                     f"compaction row mismatch: {rows} != {expected}"
                 )
-            snap = Snapshot(
-                version=prev.version + 1,
+            return dict(
                 run_ids=[run_id],
-                committed_keys=prev.committed_keys,
                 row_counts={run_id: rows},
                 retired_run_ids=sorted(
                     set(prev.retired_run_ids) | set(prev.run_ids)
                 ),
-                schema_json=prev.schema_json,
-                column_stats={run_id: run_stats},
-                file_stats={run_id: run_fstats},
-                operation="compact",
+                file_stats={run_id: fstats},
+                delete_files=[],
             )
-            try:
-                self._write_snapshot(snap)
-                return snap
-            except SnapshotConflictError:
-                continue  # re-read, re-fold the newly committed rows
-        raise SnapshotConflictError(
-            f"compaction lost {_CAS_RETRIES} CAS races; "
-            "a writer is livelocking this table"
-        )
+
+        return self._commit("compaction", "compact", lambda prev: False, rewrite)
 
     def merge(
         self,
@@ -975,202 +957,115 @@ class SnapshotTable:
             upserts = updates.filter(
                 ~F.coalesce(F.col(delete_col), F.lit(False))
             ).drop(delete_col)
-        if mode == "mor":
-            return self._merge_mor(
-                spark, key, merge_id, upd_keys, upserts, key_cols, key_filters
-            )
-        if mode != "cow":
+        if mode not in ("cow", "mor"):
             raise ValueError(f"merge: unknown mode {mode!r} (cow | mor)")
-        for _ in range(_CAS_RETRIES):
-            prev = self.latest_snapshot()
-            if prev is not None and key in prev.committed_keys:
-                return prev  # idempotent re-merge
-            if prev is not None and prev.delete_files:
-                raise ValueError(
-                    "copy-on-write MERGE with outstanding equality deletes "
-                    "would resurrect deleted rows from its survivor scan; "
-                    "compact() first, or keep using mode='mor'"
-                )
-            # zone-map prune BEFORE any scan: a run whose committed key
-            # range provably misses every update key cannot contain a match
-            # and stays referenced untouched, unread (at 100 TB a merge
-            # keyed to one day's id range must not scan the other 364).
-            scan_runs = [
-                r
-                for r in (prev.run_ids if prev else [])
-                if not _run_provably_empty(
-                    prev.column_stats.get(r), key_filters
-                )
-            ]
-            if scan_runs:
-                schema = (
-                    StructType.fromJson(json.loads(prev.schema_json))
-                    if prev.schema_json
-                    else None
-                )
+        body = self._merge_cow if mode == "cow" else self._merge_mor
 
-                def _run_frame(r: str) -> DataFrame:
-                    reader = spark.read.schema(schema) if schema else spark.read
-                    # per-run lit() provenance instead of basePath partition
-                    # discovery: partition-type inference would corrupt
-                    # digit-only run ids ("01" -> 1 -> "1")
-                    return reader.parquet(self.staged_dir(r)).withColumn(
-                        "__run", F.lit(r)
-                    )
-
-                cur = _run_frame(scan_runs[0])
-                for r in scan_runs[1:]:
-                    cur = cur.unionByName(_run_frame(r))
-                matched_runs = sorted(
-                    row["__run"]
-                    for row in cur.join(upd_keys, key_cols, "leftsemi")
-                    .select("__run")
-                    .distinct()
-                    .collect()
-                )
-                untouched = [r for r in prev.run_ids if r not in matched_runs]
-                survivors = (
-                    cur.filter(F.col("__run").isin(matched_runs))
-                    .drop("__run")
-                    .join(upd_keys, key_cols, "left_anti")
-                )
-                result = survivors.unionByName(upserts, allowMissingColumns=True)
-            else:
-                matched_runs = []
-                untouched = list(prev.run_ids) if prev else []
-                result = upserts
-            version = (prev.version + 1) if prev else 1
-            run_id = f"merge-{merge_id}-v{version}-{os.urandom(4).hex()}"
-            self.stage(result, run_id)
-            staged = spark.read.parquet(self.staged_dir(run_id))
-            rows, run_stats, run_fstats = _collect_stats(staged)
-            snap = Snapshot(
-                version=version,
-                run_ids=untouched + [run_id],
-                committed_keys=sorted(
-                    set(prev.committed_keys if prev else []) | {key}
-                ),
+        def rewrite(prev: Snapshot) -> dict:
+            tag = f"{merge_id}-v{prev.version + 1}-{os.urandom(4).hex()}"
+            result, retired, deletes = body(
+                spark, prev, tag, upd_keys, upserts, key_cols, key_filters
+            )
+            run_id = f"merge-{tag}"
+            rows, fstats, schema = self._stage_stats(spark, run_id, result)
+            kept = [r for r in prev.run_ids if r not in retired]
+            return dict(
+                run_ids=kept + [run_id],
+                committed_keys=sorted(set(prev.committed_keys) | {key}),
                 row_counts={
-                    **{
-                        r: prev.row_counts[r]
-                        for r in untouched
-                        if prev and r in prev.row_counts
-                    },
+                    **{r: n for r, n in prev.row_counts.items() if r in kept},
                     run_id: rows,
                 },
-                retired_run_ids=sorted(
-                    set(prev.retired_run_ids if prev else []) | set(matched_runs)
-                ),
-                schema_json=_evolve_schema(
-                    prev.schema_json if prev else None, staged.schema
-                ),
-                column_stats={
-                    **{
-                        r: (prev.column_stats if prev else {})[r]
-                        for r in untouched
-                        if prev and r in prev.column_stats
-                    },
-                    run_id: run_stats,
-                },
+                retired_run_ids=sorted(set(prev.retired_run_ids) | set(retired)),
+                schema_json=_evolve_schema(prev.schema(), schema),
                 file_stats={
-                    **{
-                        r: (prev.file_stats if prev else {})[r]
-                        for r in untouched
-                        if prev and r in prev.file_stats
-                    },
-                    run_id: run_fstats,
+                    **{r: f for r, f in prev.file_stats.items() if r in kept},
+                    run_id: fstats,
                 },
-                operation="merge",
-                # empty by the outstanding-deletes guard above; explicit so
-                # a future guard relaxation cannot silently drop deletes
-                delete_files=list(prev.delete_files) if prev else [],
+                delete_files=prev.delete_files + deletes,
             )
-            try:
-                self._write_snapshot(snap)
-                return snap
-            except SnapshotConflictError:
-                continue  # restart from the fresh snapshot
-        raise SnapshotConflictError(
-            f"merge {merge_id!r} lost {_CAS_RETRIES} CAS races; "
-            "a writer is livelocking this table"
+
+        return self._commit(
+            f"merge {merge_id!r} ({mode})", "merge",
+            lambda prev: key in prev.committed_keys, rewrite,
+        )
+
+    def _merge_cow(
+        self,
+        spark: SparkSession,
+        prev: Snapshot,
+        tag: str,
+        upd_keys: DataFrame,
+        upserts: DataFrame,
+        key_cols: list[str],
+        key_filters: list,
+    ) -> tuple[DataFrame, list[str], list[dict]]:
+        """merge(mode="cow") body: ``(result, retired_runs, [])`` — the
+        runs holding a matched key are retired and their survivors written
+        with the upserts into the merge's new run."""
+        if prev.delete_files:
+            raise ValueError(
+                "copy-on-write MERGE with outstanding equality deletes "
+                "would resurrect deleted rows from its survivor scan; "
+                "compact() first, or keep using mode='mor'"
+            )
+        # zone-map prune BEFORE any scan: a run none of whose files' key
+        # range can hold an update key cannot contain a match and stays
+        # referenced untouched, unread (at 100 TB a merge keyed to one
+        # day's id range must not scan the other 364).
+        scan_runs, _ = self.prune(prev, key_filters)
+        if not scan_runs:
+            return upserts, [], []
+        # per-run lit() provenance instead of basePath partition discovery:
+        # partition-type inference would corrupt digit-only run ids
+        # ("01" -> 1 -> "1")
+        cur = functools.reduce(DataFrame.unionByName, [
+            self._scan(spark, prev, [self.staged_dir(r)])
+            .withColumn("__run", F.lit(r))
+            for r in scan_runs
+        ])
+        matched_runs = sorted(
+            row["__run"]
+            for row in cur.join(upd_keys, key_cols, "leftsemi")
+            .select("__run")
+            .distinct()
+            .collect()
+        )
+        survivors = (
+            cur.filter(F.col("__run").isin(matched_runs))
+            .drop("__run")
+            .join(upd_keys, key_cols, "left_anti")
+        )
+        return (
+            survivors.unionByName(upserts, allowMissingColumns=True),
+            matched_runs,
+            [],
         )
 
     def _merge_mor(
         self,
         spark: SparkSession,
-        key: str,
-        merge_id: str,
+        prev: Snapshot,
+        tag: str,
         upd_keys: DataFrame,
         upserts: DataFrame,
         key_cols: list[str],
         key_filters: list,
-    ) -> Snapshot:
-        """merge(mode="mor") body: one equality-delete keys file + one
-        insert run, no data-file rewrite (see merge() docstring).  The
-        delete entry's ``applies_to`` is zone-map pruned at write time —
-        a run whose committed key range provably misses every update key
-        is not even listed, so readers never anti-join against it."""
-        for _ in range(_CAS_RETRIES):
-            prev = self.latest_snapshot()
-            if prev is not None and key in prev.committed_keys:
-                return prev  # idempotent re-merge
-            version = (prev.version + 1) if prev else 1
-            nonce = os.urandom(4).hex()
-            ins_run = f"merge-{merge_id}-v{version}-{nonce}"
-            applies_to = [
-                r
-                for r in (prev.run_ids if prev else [])
-                if not _run_provably_empty(
-                    prev.column_stats.get(r), key_filters
-                )
-            ]
-            del_entry = None
-            if applies_to:
-                del_run = f"eqdel-{merge_id}-v{version}-{nonce}"
-                self.stage(upd_keys, del_run)
-                del_entry = {
-                    "run": del_run,
-                    "key_cols": list(key_cols),
-                    "applies_to": applies_to,
-                }
-            self.stage(upserts, ins_run)
-            staged = spark.read.parquet(self.staged_dir(ins_run))
-            rows, run_stats, run_fstats = _collect_stats(staged)
-            snap = Snapshot(
-                version=version,
-                run_ids=(prev.run_ids if prev else []) + [ins_run],
-                committed_keys=sorted(
-                    set(prev.committed_keys if prev else []) | {key}
-                ),
-                row_counts={
-                    **(prev.row_counts if prev else {}),
-                    ins_run: rows,
-                },
-                retired_run_ids=list(prev.retired_run_ids) if prev else [],
-                schema_json=_evolve_schema(
-                    prev.schema_json if prev else None, staged.schema
-                ),
-                column_stats={
-                    **(prev.column_stats if prev else {}),
-                    ins_run: run_stats,
-                },
-                file_stats={
-                    **(prev.file_stats if prev else {}),
-                    ins_run: run_fstats,
-                },
-                operation="merge",
-                delete_files=(list(prev.delete_files) if prev else [])
-                + ([del_entry] if del_entry else []),
-            )
-            try:
-                self._write_snapshot(snap)
-                return snap
-            except SnapshotConflictError:
-                continue
-        raise SnapshotConflictError(
-            f"merge {merge_id!r} (mor) lost {_CAS_RETRIES} CAS races; "
-            "a writer is livelocking this table"
-        )
+    ) -> tuple[DataFrame, list[str], list[dict]]:
+        """merge(mode="mor") body: ``(upserts, [], [delete entry])`` — one
+        equality-delete keys file, no data-file rewrite (see merge()
+        docstring).  The delete entry's ``applies_to`` is zone-map pruned
+        at write time — a run none of whose files' key range can hold an
+        update key is not even listed, so readers never anti-join against
+        it (and with no such run, no delete file is written at all)."""
+        applies_to, _ = self.prune(prev, key_filters)
+        if not applies_to:
+            return upserts, [], []
+        del_run = f"eqdel-{tag}"
+        self.stage(upd_keys, del_run)
+        return upserts, [], [
+            {"run": del_run, "key_cols": list(key_cols), "applies_to": applies_to}
+        ]
 
     def vacuum(
         self, retain_last: int = 1, min_age_seconds: float = 3 * 86400
@@ -1325,31 +1220,13 @@ class SnapshotTable:
                 f"rollback: {len(missing)} run dir(s) of v{to_version} were "
                 "expired by vacuum; the data no longer exists at that version"
             )
-        for _ in range(_CAS_RETRIES):
-            prev = self.latest_snapshot()
-            assert prev is not None  # target exists, so a snapshot does
-            if prev.version == to_version:
-                return prev  # already there
-            snap = Snapshot(
-                version=prev.version + 1,
-                run_ids=list(target.run_ids),
-                committed_keys=list(target.committed_keys),
-                row_counts=dict(target.row_counts),
-                retired_run_ids=list(target.retired_run_ids),
-                schema_json=target.schema_json,
-                column_stats=dict(target.column_stats),
-                file_stats=dict(target.file_stats),
-                operation="rollback",
-                delete_files=[dict(d) for d in target.delete_files],
-            )
-            try:
-                self._write_snapshot(snap)
-                return snap
-            except SnapshotConflictError:
-                continue
-        raise SnapshotConflictError(
-            f"rollback to v{to_version} lost {_CAS_RETRIES} CAS races; "
-            "a writer is livelocking this table"
+        state = {
+            k: v for k, v in asdict(target).items()
+            if k not in ("version", "operation")
+        }
+        return self._commit(
+            f"rollback to v{to_version}", "rollback",
+            lambda prev: prev.version == to_version, lambda prev: state,
         )
 
     # ------------------------------------------------------------- read path
@@ -1365,16 +1242,16 @@ class SnapshotTable:
         """Split a snapshot's run_ids into (kept, skipped) under conjunctive
         ``filters`` — tuples ``(col, op, value)`` with op in =, ==, <, <=,
         >, >=, in, between, is_null, is_not_null (value omitted for the
-        null tests).  A run is skipped only when its committed zone-map
-        stats PROVE no row can satisfy the conjunction, including runs
-        committed before a filtered column existed (schema evolution reads
-        them all-NULL).  Legacy snapshots without stats keep everything."""
+        null tests).  A run is kept when at least one of its files may
+        match: it is skipped only when the committed per-file zone maps
+        PROVE no row of any of its files can satisfy the conjunction,
+        including runs committed before a filtered column existed (schema
+        evolution reads them all-NULL).  Runs of legacy snapshots without
+        per-file stats are always kept."""
         kept, skipped = [], []
         for r in snap.run_ids:
-            if _run_provably_empty(snap.column_stats.get(r), filters):
-                skipped.append(r)
-            else:
-                kept.append(r)
+            may = _run_may_match(snap.file_stats.get(r), filters)
+            (kept if may else skipped).append(r)
         return kept, skipped
 
     def read(
@@ -1392,8 +1269,9 @@ class SnapshotTable:
         latest.
 
         ``filters`` (see :meth:`prune`) enables manifest-level file
-        skipping: run dirs whose zone-map stats prove no row can match are
-        never handed to the scan AT PLAN-BUILD TIME — at 100 TB this is the
+        skipping: run dirs none of whose files can match, and the files of
+        kept runs whose zone maps prove no row can match, are never handed
+        to the scan AT PLAN-BUILD TIME — at 100 TB this is the
         difference between listing/reading 3 of 365 daily runs and all of
         them, before Spark's own parquet row-group pruning even starts.
         The same conjuncts are re-applied as a residual row filter (and
@@ -1407,45 +1285,6 @@ class SnapshotTable:
         snap = self.latest_snapshot() if version is None else self.snapshot(version)
         if snap is None or not snap.run_ids:
             return None
-        run_ids = snap.run_ids
-        if filters:
-            run_ids, _ = self.prune(snap, filters)
-        schema = (
-            StructType.fromJson(json.loads(snap.schema_json))
-            if snap.schema_json is not None
-            else None
-        )
-        run_paths: dict[str, list[str]] = {}
-        for r in run_ids:
-            fstats = snap.file_stats.get(r)
-            if filters and fstats:
-                # file-level manifest pruning within the kept run: plan only
-                # the files whose zone maps can match (with cluster_by
-                # writes, one file of N for a point/range query)
-                run_paths[r] = [
-                    os.path.join(self.staged_dir(r), fn)
-                    for fn, st in sorted(fstats.items())
-                    if not _run_provably_empty(st, filters)
-                ]
-            else:
-                run_paths[r] = [self.staged_dir(r)]
-        if not any(run_paths.values()):
-            # everything pruned: an empty frame in the snapshot schema
-            # (schema_json is recorded by every stats-writing commit)
-            if schema is None:
-                schema = spark.read.parquet(
-                    *[self.staged_dir(r) for r in snap.run_ids]
-                ).schema
-            return spark.createDataFrame([], schema)
-
-        def _scan(paths: list[str]) -> DataFrame:
-            # schema from snapshot metadata, Iceberg-style: runs written
-            # before a column existed read back with NULLs there, and no
-            # per-file footer merge (mergeSchema) is ever needed
-            if schema is not None:
-                return spark.read.schema(schema).parquet(*paths)
-            return spark.read.parquet(*paths)
-
         # merge-on-read: group runs by WHICH equality-delete files apply
         # (Iceberg sequence-number scoping via each entry's applies_to),
         # scan each group once, anti-join its delete-key files, union.
@@ -1453,28 +1292,129 @@ class SnapshotTable:
         # broadcasts; a table with no outstanding deletes takes the single
         # one-scan path unchanged.
         groups: dict[tuple, list[str]] = {}
-        for r, ps in run_paths.items():
-            if not ps:
-                continue
+        for r in self.prune(snap, filters)[0] if filters else snap.run_ids:
+            fstats = snap.file_stats.get(r)
+            if filters and fstats is not None:
+                # file-level manifest pruning within the kept run: plan only
+                # the files whose zone maps can match (with cluster_by
+                # writes, one file of N for a point/range query)
+                paths = [
+                    os.path.join(self.staged_dir(r), fn)
+                    for fn, st in sorted(fstats.items())
+                    if not _provably_empty(st, filters)
+                ]
+            else:
+                paths = [self.staged_dir(r)]
             applicable = tuple(
                 i
                 for i, d in enumerate(snap.delete_files)
                 if r in d["applies_to"]
             )
-            groups.setdefault(applicable, []).extend(ps)
+            groups.setdefault(applicable, []).extend(paths)
+        if not groups:
+            return self._scan(spark, snap, [])  # everything pruned
         df = None
         for applicable, paths in sorted(groups.items()):
-            part = _scan(paths)
+            part = self._scan(spark, snap, paths)
             for i in applicable:
                 d = snap.delete_files[i]
-                keys = spark.read.parquet(
-                    self.staged_dir(d["run"])
-                ).select(*d["key_cols"]).distinct()
-                part = part.join(keys, d["key_cols"], "left_anti")
+                part = part.join(
+                    self._delete_keys(spark, d), d["key_cols"], "left_anti"
+                )
             df = part if df is None else df.unionByName(part)
         if filters:
             df = df.filter(_filters_to_expr(filters))
         return df
+
+    def _scan(
+        self, spark: SparkSession, snap: Snapshot, paths: list[str]
+    ) -> DataFrame:
+        """Parquet scan of ``paths`` under ``snap``'s schema, Iceberg-style:
+        runs written before a column existed read back with NULLs there,
+        and no per-file footer merge (mergeSchema) is ever needed.  No
+        paths: an empty frame in that schema (a legacy snapshot without a
+        recorded schema takes it from its runs' footers)."""
+        schema = snap.schema()
+        if not paths:
+            if schema is None:
+                schema = spark.read.parquet(
+                    *[self.staged_dir(r) for r in snap.run_ids]
+                ).schema
+            return spark.createDataFrame([], schema)
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(*paths)
+
+    def _delete_keys(self, spark: SparkSession, d: dict) -> DataFrame:
+        """The distinct key tuples of one equality-delete entry."""
+        return (
+            spark.read.parquet(self.staged_dir(d["run"]))
+            .select(*d["key_cols"])
+            .distinct()
+        )
+
+    def _live_dirs(self, runs: list[str], who: str, what: str) -> list[str]:
+        """The run dirs of ``runs``.  Vacuumed history cannot be scanned
+        (Iceberg: expired snapshots), so a missing dir fails at plan time
+        with the remedy, not mid-job with a FileNotFoundError."""
+        paths = [self.staged_dir(r) for r in runs]
+        gone = [p for p in paths if not os.path.isdir(p)]
+        if gone:
+            raise ValueError(
+                f"{who}: {what}: {len(gone)} run dir(s) were expired by "
+                "vacuum; bootstrap from a full read() at the target version "
+                "instead"
+            )
+        return paths
+
+    def _walk(self, who: str, from_version: int, to_version: int | None):
+        """The snapshot range ``(from_version, to_version]`` shared by
+        read_changes and read_changelog.  Validates the range and returns
+        ``(to_snap, steps)``; ``steps`` lazily yields, per snapshot in
+        order, ``(v, op, added_runs, retired_runs, new_deletes)``.  A
+        legacy record without an ``operation`` is classified
+        conservatively: growth of ``retired_run_ids`` marks a "rewrite",
+        anything else an "append".  A hole in the log raises — never
+        silent data loss.  ``from_version`` 0 starts before the first
+        snapshot."""
+        to_snap = (
+            self.latest_snapshot()
+            if to_version is None
+            else self.snapshot(to_version)
+        )
+        if to_snap is None:
+            raise ValueError(f"{who}: no committed snapshot to read to")
+        if from_version > to_snap.version:
+            raise ValueError(
+                f"{who}: from_version {from_version} is beyond "
+                f"snapshot {to_snap.version}"
+            )
+        base = (
+            self.snapshot(from_version)
+            if from_version > 0
+            else Snapshot(version=0, run_ids=[])
+        )
+        if base is None:
+            raise ValueError(f"{who}: snapshot v{from_version} does not exist")
+
+        def steps():
+            prev, seen = base, set(base.run_ids) | set(base.retired_run_ids)
+            for v in range(base.version + 1, to_snap.version + 1):
+                s = self.snapshot(v)
+                if s is None:
+                    raise ValueError(f"{who}: snapshot v{v} is missing")
+                was, now = set(prev.retired_run_ids), set(s.retired_run_ids)
+                op = s.operation or ("rewrite" if now > was else "append")
+                yield (
+                    v,
+                    op,
+                    [r for r in s.run_ids if r not in seen],
+                    sorted(now - was),
+                    s.delete_files[len(prev.delete_files):],
+                )
+                seen |= set(s.run_ids) | set(s.retired_run_ids)
+                prev = s
+
+        return to_snap, steps()
 
     def read_changes(
         self,
@@ -1502,45 +1442,11 @@ class SnapshotTable:
         ``from_version`` 0 means "from before the first snapshot" (a full
         bootstrap read).  Returns an empty frame when the range adds
         nothing."""
-        to_snap = (
-            self.latest_snapshot()
-            if to_version is None
-            else self.snapshot(to_version)
-        )
-        if to_snap is None:
-            raise ValueError("read_changes: no committed snapshot to read to")
-        if from_version > to_snap.version:
-            raise ValueError(
-                f"read_changes: from_version {from_version} is beyond "
-                f"snapshot {to_snap.version}"
-            )
+        to_snap, steps = self._walk("read_changes", from_version, to_version)
         new_runs: list[str] = []
-        if from_version > 0:
-            base = self.snapshot(from_version)
-            if base is None:
-                raise ValueError(
-                    f"read_changes: snapshot v{from_version} does not exist"
-                )
-            prev_runs = set(base.run_ids) | set(base.retired_run_ids)
-            prev_retired = set(base.retired_run_ids)
-        else:
-            prev_runs = set()
-            prev_retired = set()
-        for v in range(max(from_version, 0) + 1, to_snap.version + 1):
-            s = self.snapshot(v)
-            if s is None:
-                raise ValueError(f"read_changes: snapshot v{v} is missing")
-            op = s.operation
-            if op is None:  # legacy record: infer from retire growth
-                op = (
-                    "rewrite"
-                    if set(s.retired_run_ids) > prev_retired
-                    else "append"
-                )
+        for v, op, added, _, _ in steps:
             if op == "append":
-                new_runs.extend(
-                    r for r in s.run_ids if r not in prev_runs
-                )
+                new_runs.extend(added)
             elif op != "compact":
                 raise ValueError(
                     f"read_changes: snapshot v{v} is a {op!r} — a logical "
@@ -1548,33 +1454,8 @@ class SnapshotTable:
                     "use read_changelog() for row-level delete+insert CDC, "
                     "or read the full table at that version"
                 )
-            prev_runs |= set(s.run_ids) | set(s.retired_run_ids)
-            prev_retired = set(s.retired_run_ids)
-        schema = (
-            StructType.fromJson(json.loads(to_snap.schema_json))
-            if to_snap.schema_json is not None
-            else None
-        )
-        if not new_runs:
-            if schema is None:
-                schema = spark.read.parquet(
-                    *[self.staged_dir(r) for r in to_snap.run_ids]
-                ).schema
-            return spark.createDataFrame([], schema)
-        paths = [self.staged_dir(r) for r in new_runs]
-        expired = [p for p in paths if not os.path.isdir(p)]
-        if expired:
-            # vacuumed history cannot be incrementally scanned (Iceberg:
-            # expired snapshots) — fail at plan time with the remedy, not
-            # mid-job with a FileNotFoundError from the scan
-            raise ValueError(
-                f"read_changes: {len(expired)} appended run dir(s) in the "
-                "range were expired by vacuum; bootstrap from a full "
-                "read() at the target version instead"
-            )
-        if schema is not None:
-            return spark.read.schema(schema).parquet(*paths)
-        return spark.read.parquet(*paths)
+        paths = self._live_dirs(new_runs, "read_changes", "appended")
+        return self._scan(spark, to_snap, paths)
 
     def read_changelog(
         self,
@@ -1604,33 +1485,8 @@ class SnapshotTable:
         union-compatible).  Requires the merge's retired run dirs to still
         exist: vacuumed history cannot be diffed (same remedy as
         read_changes — bootstrap from a full read)."""
-        to_snap = (
-            self.latest_snapshot()
-            if to_version is None
-            else self.snapshot(to_version)
-        )
-        if to_snap is None:
-            raise ValueError("read_changelog: no committed snapshot to read to")
-        if from_version > to_snap.version:
-            raise ValueError(
-                f"read_changelog: from_version {from_version} is beyond "
-                f"snapshot {to_snap.version}"
-            )
-        if from_version > 0 and self.snapshot(from_version) is None:
-            raise ValueError(
-                f"read_changelog: snapshot v{from_version} does not exist"
-            )
-        base = self.snapshot(from_version) if from_version > 0 else None
-        prev_runs = (
-            set(base.run_ids) | set(base.retired_run_ids) if base else set()
-        )
-        prev_retired = set(base.retired_run_ids) if base else set()
-        prev_n_dels = len(base.delete_files) if base else 0
-        schema = (
-            StructType.fromJson(json.loads(to_snap.schema_json))
-            if to_snap.schema_json is not None
-            else None
-        )
+        to_snap, steps = self._walk("read_changelog", from_version, to_version)
+        schema = to_snap.schema()
 
         def _conform(df: DataFrame) -> DataFrame:
             # rows read under an earlier snapshot's schema: backfill NULL
@@ -1646,19 +1502,8 @@ class SnapshotTable:
             ])
 
         def _read(runs: list[str], what: str, v: int) -> DataFrame:
-            paths = [self.staged_dir(r) for r in runs]
-            gone = [p for p in paths if not os.path.isdir(p)]
-            if gone:
-                raise ValueError(
-                    f"read_changelog: {len(gone)} {what} run dir(s) at v{v} "
-                    "were expired by vacuum; bootstrap from a full read() "
-                    "at the target version instead"
-                )
-            if schema is not None:
-                return spark.read.schema(schema).parquet(*paths)
-            return spark.read.parquet(*paths)
-
-        pieces: list[DataFrame] = []
+            paths = self._live_dirs(runs, "read_changelog", f"v{v} {what}")
+            return self._scan(spark, to_snap, paths)
 
         def _tag(df: DataFrame, kind: str, v: int) -> DataFrame:
             return df.select(
@@ -1667,81 +1512,46 @@ class SnapshotTable:
                 F.lit(v).alias("_change_version"),
             )
 
-        for v in range(max(from_version, 0) + 1, to_snap.version + 1):
-            s = self.snapshot(v)
-            if s is None:
-                raise ValueError(f"read_changelog: snapshot v{v} is missing")
-            op = s.operation
-            if op is None:  # legacy record: a rewrite of unknown kind
-                op = (
-                    "rewrite"
-                    if set(s.retired_run_ids) > prev_retired
-                    else "append"
-                )
+        pieces: list[DataFrame] = []
+        for v, op, new_runs, old_runs, new_dels in steps:
             if op == "append":
-                new = [r for r in s.run_ids if r not in prev_runs]
-                if new:
-                    pieces.append(_tag(_read(new, "appended", v), "insert", v))
+                if new_runs:
+                    pieces.append(_tag(_read(new_runs, "appended", v), "insert", v))
+            elif op == "merge" and old_runs and new_runs:
+                # copy-on-write: value-level diff of the rewritten runs
+                old_df = _read(old_runs, "merge-retired", v)
+                new_df = _read(new_runs, "merge-output", v)
+                pieces.append(_tag(old_df.exceptAll(new_df), "delete", v))
+                pieces.append(_tag(new_df.exceptAll(old_df), "insert", v))
             elif op == "merge":
-                old_runs = sorted(set(s.retired_run_ids) - prev_retired)
-                new_runs = [r for r in s.run_ids if r not in prev_runs]
-                new_dels = s.delete_files[prev_n_dels:]
-                if old_runs and new_runs:  # copy-on-write: value-level diff
-                    old_df = _read(old_runs, "merge-retired", v)
-                    new_df = _read(new_runs, "merge-output", v)
-                    pieces.append(_tag(old_df.exceptAll(new_df), "delete", v))
-                    pieces.append(_tag(new_df.exceptAll(old_df), "insert", v))
-                elif new_dels:
-                    # merge-on-read: the pre-image of every deleted key is
-                    # the prior version's MOR-applied read semi-joined on
-                    # the delete-key file (matched keys only — an update
-                    # key that matched nothing emits no delete), inserts
-                    # are the merge's insert run verbatim
-                    pre = self.read(spark, version=v - 1)
-                    for d in new_dels:
-                        if not os.path.isdir(self.staged_dir(d["run"])):
-                            raise ValueError(
-                                f"read_changelog: the equality-delete file "
-                                f"at v{v} was expired by vacuum; bootstrap "
-                                "from a full read() at the target version "
-                                "instead"
-                            )
-                        keys = spark.read.parquet(
-                            self.staged_dir(d["run"])
-                        ).select(*d["key_cols"]).distinct()
-                        pieces.append(_tag(
-                            _conform(pre.join(keys, d["key_cols"],
-                                              "left_semi")),
-                            "delete", v,
-                        ))
-                    if new_runs:
-                        pieces.append(_tag(
-                            _read(new_runs, "merge-output", v), "insert", v
-                        ))
-                elif new_runs:  # merge into an empty match set: pure insert
-                    pieces.append(
-                        _tag(_read(new_runs, "merge-output", v), "insert", v)
+                # merge-on-read: the pre-image of every deleted key is the
+                # prior version's MOR-applied read semi-joined on the
+                # delete-key file (matched keys only — an update key that
+                # matched nothing emits no delete); inserts are the merge's
+                # insert run verbatim (also a merge into an empty match set)
+                for d in new_dels:
+                    self._live_dirs(
+                        [d["run"]], "read_changelog", f"v{v} equality-delete"
                     )
+                    pre = self.read(spark, version=v - 1)
+                    pieces.append(_tag(
+                        _conform(pre.join(self._delete_keys(spark, d),
+                                          d["key_cols"], "left_semi")),
+                        "delete", v,
+                    ))
+                if new_runs:
+                    pieces.append(_tag(
+                        _read(new_runs, "merge-output", v), "insert", v
+                    ))
             elif op != "compact":
                 raise ValueError(
                     f"read_changelog: snapshot v{v} is a {op!r} — not "
                     "expressible as forward row-level changes; read the "
                     "full table at that version instead"
                 )
-            prev_runs |= set(s.run_ids) | set(s.retired_run_ids)
-            prev_retired = set(s.retired_run_ids)
-            prev_n_dels = len(s.delete_files)
         if not pieces:
-            if schema is None:
-                schema = spark.read.parquet(
-                    *[self.staged_dir(r) for r in to_snap.run_ids]
-                ).schema
-            empty = spark.createDataFrame([], schema)
-            return _tag(empty, "insert", 0).filter(F.lit(False))
-        out = pieces[0]
-        for p in pieces[1:]:
-            out = out.unionByName(p)
-        return out
+            return _tag(self._scan(spark, to_snap, []), "insert", 0)
+        return functools.reduce(DataFrame.unionByName, pieces)
 
     def history(self, spark: SparkSession) -> "DataFrame | None":
         """Iceberg's snapshots metadata table: one row per committed

@@ -199,7 +199,9 @@ class TestMergeZoneMapPruning:
         assert snap.retired_run_ids == []
         assert _rows(spark, t) == {1: "a", 2: "b", 3: "c", 4: "d", 500: "new"}
 
-    def test_range_pruned_run_keeps_its_stats(self, spark, tmp_path):
+    def test_range_pruned_run_keeps_its_stats(
+        self, spark, tmp_path, file_values
+    ):
         t = _table(
             spark, tmp_path,
             [("r1", [(1, "a"), (2, "b")]), ("r2", [(30, "c"), (40, "d")])],
@@ -207,8 +209,14 @@ class TestMergeZoneMapPruning:
         upd = spark.createDataFrame([(30, "C")], "k long, v string")
         snap = t.merge(spark, upd, ["k"], merge_id="m-prune")
         # r1's key range [1,2] provably misses key 30: untouched, stats kept
-        assert "r1" in snap.run_ids and "r1" in snap.column_stats
-        assert snap.column_stats["r1"]["k"] == {"min": 1, "max": 2, "nulls": 0}
+        assert "r1" in snap.run_ids and "r1" in snap.file_stats
+        got = {fn: st["k"] for fn, st in snap.file_stats["r1"].items()}
+        assert got == {
+            fn: {"min": min(ks), "max": max(ks), "nulls": 0}
+            for fn, ks in file_values(t, "r1", "k").items()
+        }
+        assert min(e["min"] for e in got.values()) == 1
+        assert max(e["max"] for e in got.values()) == 2
         assert "r2" in snap.retired_run_ids
         assert _rows(spark, t) == {1: "a", 2: "b", 30: "C", 40: "d"}
         # zone-map read over the post-merge table still prunes correctly

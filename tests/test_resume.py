@@ -14,6 +14,28 @@ from moira_spark.sources.tableio import SnapshotTable
 N_TURNS = 3000
 
 
+def _plain(vals) -> dict:
+    """The zone-map entry commit records for a plain column's values."""
+    nn = [v for v in vals if v is not None]
+    return {
+        "min": min(nn, default=None),
+        "max": max(nn, default=None),
+        "nulls": len(vals) - len(nn),
+    }
+
+
+def _fold(snap, run: str, col: str) -> tuple:
+    """(min, max, nulls) of ``col`` over one run's per-file zone maps."""
+    ents = [st[col] for st in snap.file_stats[run].values()]
+    mins = [e["min"] for e in ents if e["min"] is not None]
+    maxs = [e["max"] for e in ents if e["max"] is not None]
+    return (
+        min(mins, default=None),
+        max(maxs, default=None),
+        sum(e["nulls"] for e in ents),
+    )
+
+
 def _final_state(spark, table: SnapshotTable):
     df = table.read(spark)
     pdf = df.toPandas().sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
@@ -108,6 +130,75 @@ class TestResume:
         assert got.keep.tolist() == ref.keep.tolist()
         assert got.conv_keep.tolist() == ref.conv_keep.tolist()
         assert got.scrubbed_text.tolist() == ref.scrubbed_text.tolist()
+
+
+class TestAuditRows:
+    """job.audit_rows values, recomputed in pandas from the same labels."""
+
+    @staticmethod
+    def _expected(labels) -> dict:
+        from collections import Counter
+
+        pdf = labels.select(
+            F.spark_partition_id().alias("partition_id"),
+            "conv_id", "keep", "conv_keep", "reasons",
+        ).toPandas()
+        want = {}
+        for pid, g in pdf.groupby("partition_id"):
+            hits = Counter(r for rs in g.reasons for r in rs)
+            want[int(pid)] = {
+                "input_turns": len(g),
+                "kept_turns": int(g.keep.sum()),
+                "dropped_turns": int((~g.keep).sum()),
+                "rule_hits": sorted(hits.items()),
+                "convs_dropped": g.loc[~g.conv_keep, "conv_id"].nunique(),
+            }
+        return want
+
+    def test_audit_matches_pandas_per_partition(self, spark, tmp_path):
+        from moira_spark.job import AUDIT_SCHEMA_DOC, audit_rows
+        from moira_spark.pipeline import release_cache, run_pipeline
+
+        labels = run_pipeline(spark, tg.gen_spark(spark, N_TURNS))
+        labels.write.parquet(str(tmp_path / "labels"))
+        release_cache(labels)
+        staged = spark.read.parquet(str(tmp_path / "labels"))
+        # as the job stages it, and under a layout with many partitions
+        for frame in (staged, staged.repartition(8, "conv_id")):
+            want = self._expected(frame)
+            rows = audit_rows(frame, "run", 3, 17).withColumn(
+                "keys", F.map_keys("rule_hits")
+            ).collect()
+            assert rows and rows[0].__fields__ == [
+                c.split()[0] for c in AUDIT_SCHEMA_DOC.split(", ")
+            ] + ["keys"]
+            got = {}
+            for r in rows:
+                assert (r.run_id, r.snapshot_bucket, r.wall_ms) == ("run", 3, 17)
+                # map entries sorted by reason; no zero-count entries
+                assert r.keys == sorted(r.rule_hits)
+                assert all(n > 0 for n in r.rule_hits.values())
+                got[r.partition_id] = {
+                    "input_turns": r.input_turns,
+                    "kept_turns": r.kept_turns,
+                    "dropped_turns": r.dropped_turns,
+                    "rule_hits": sorted(r.rule_hits.items()),
+                    "convs_dropped": r.convs_dropped,
+                }
+            assert got == want
+            assert sum(v["input_turns"] for v in got.values()) == staged.count()
+
+    def test_partition_without_hits_gets_empty_map(self, spark):
+        from moira_spark.job import audit_rows
+
+        labels = spark.createDataFrame(
+            [("c1", True, True, []), ("c2", True, True, [])],
+            "conv_id string, keep boolean, conv_keep boolean, "
+            "reasons array<string>",
+        ).coalesce(1)
+        [row] = audit_rows(labels, "run", 0, 0).collect()
+        assert row.rule_hits == {}
+        assert (row.input_turns, row.kept_turns, row.convs_dropped) == (2, 2, 0)
 
 
 class TestCrashBetweenCommits:
@@ -292,6 +383,57 @@ class TestSnapshotConcurrency:
         assert t.is_committed("mid-batch")
         assert snap.version == t.latest_snapshot().version
 
+    @pytest.mark.parametrize(
+        "writer", ["commit", "compact", "merge_cow", "merge_mor", "rollback"]
+    )
+    def test_every_writer_builds_on_a_racing_append(
+        self, spark, tmp_path, monkeypatch, writer
+    ):
+        # An append claims the version between the writer's snapshot read
+        # and its snapshot write: the writer must lose the CAS, retry on
+        # the fresh snapshot and land one version later, on top of it.
+        kv = "k long, v string"
+        t = SnapshotTable(str(tmp_path / "t"))
+        t.stage(spark.createDataFrame([(1, "a"), (2, "b")], kv), "r1")
+        t.commit(spark, "r1")
+        t.stage(spark.createDataFrame([(3, "c")], kv), "r2")
+        if writer == "rollback":
+            t.commit(spark, "r2")  # the append the rollback undoes
+        upd = spark.createDataFrame([(2, "B")], kv)
+        run, want = {
+            "commit": (lambda: t.commit(spark, "r2"),
+                       {1: "a", 2: "b", 3: "c", 7: "g"}),
+            "compact": (lambda: t.compact(spark), {1: "a", 2: "b", 7: "g"}),
+            "merge_cow": (lambda: t.merge(spark, upd, ["k"], "m1"),
+                          {1: "a", 2: "B", 7: "g"}),
+            "merge_mor": (lambda: t.merge(spark, upd, ["k"], "m1", mode="mor"),
+                          {1: "a", 2: "B", 7: "g"}),
+            # rollback restores v1's state: the racing append is undone too
+            "rollback": (lambda: t.rollback(1), {1: "a", 2: "b"}),
+        }[writer]
+        base = t.latest_snapshot().version
+
+        real_write = SnapshotTable._write_snapshot
+        calls = []
+
+        def racing_write(self_, snap):
+            calls.append(snap.version)
+            if len(calls) == 1:
+                other = SnapshotTable(self_.table_dir)
+                other.stage(spark.createDataFrame([(7, "g")], kv), "mid")
+                other.commit(spark, "mid")  # claims base + 1 first
+            return real_write(self_, snap)
+
+        monkeypatch.setattr(SnapshotTable, "_write_snapshot", racing_write)
+        snap = run()
+        # writer's lost attempt, the racing append, the writer's retry
+        assert calls == [base + 1, base + 1, base + 2]
+        assert snap.version == t.latest_snapshot().version == base + 2
+        assert "mid" in t.snapshot(base + 1).run_ids
+        rows = t.read(spark).collect()
+        assert {r.k: r.v for r in rows} == want and len(rows) == len(want)
+        assert t.is_committed("mid") == (writer != "rollback")
+
     def test_partial_snapshot_file_never_visible(self, spark, tmp_path):
         # latest_snapshot resolves max v<N>.json; files appear via os.link
         # of fully-written temp files, so a reader never parses a partial
@@ -392,11 +534,12 @@ class TestSchemaEvolution:
 
 class TestZoneMapPruning:
     """Iceberg-style column metrics + manifest-level file skipping
-    (tableio.py Snapshot.column_stats / SnapshotTable.prune / read(filters)).
+    (tableio.py Snapshot.file_stats / SnapshotTable.prune / read(filters)).
 
     Pruning is an optimization with a proof obligation: read(filters=...)
     must ALWAYS equal read().filter(same predicate), and a run dir may be
-    skipped only when its committed min/max/null stats prove emptiness."""
+    skipped only when the committed min/max/null stats of every one of its
+    files prove emptiness."""
 
     def _three_runs(self, spark, tmp_path):
         import pyspark.sql.functions as F
@@ -412,13 +555,20 @@ class TestZoneMapPruning:
         t.commit(spark, "r3")
         return t
 
-    def test_commit_records_exact_stats(self, spark, tmp_path):
+    def test_commit_records_exact_stats(self, spark, tmp_path, file_values):
         t = self._three_runs(spark, tmp_path)
-        stats = t.latest_snapshot().column_stats
-        assert stats["r1"]["x"] == {"min": 0, "max": 4, "nulls": 0}
-        assert stats["r2"]["x"] == {"min": 5, "max": 7, "nulls": 0}
-        assert stats["r3"]["y"] == {"min": 16, "max": 18, "nulls": 0}
-        assert "y" not in stats["r1"]  # absent = column not in run schema
+        snap = t.latest_snapshot()
+        for run, col in [("r1", "x"), ("r2", "x"), ("r3", "x"), ("r3", "y")]:
+            got = {fn: st[col] for fn, st in snap.file_stats[run].items()}
+            want = {
+                fn: _plain(v) for fn, v in file_values(t, run, col).items()
+            }
+            assert got == want, (run, col)
+        assert _fold(snap, "r1", "x") == (0, 4, 0)
+        assert _fold(snap, "r2", "x") == (5, 7, 0)
+        assert _fold(snap, "r3", "y") == (16, 18, 0)
+        # absent = column not in run schema
+        assert all("y" not in st for st in snap.file_stats["r1"].values())
 
     def test_scan_skips_pruned_run_dirs(self, spark, tmp_path):
         t = self._three_runs(spark, tmp_path)
@@ -473,7 +623,7 @@ class TestZoneMapPruning:
         ) == [8, 9]
 
     def test_all_null_column_prunes_nonnull_ops_not_is_null(
-        self, spark, tmp_path
+        self, spark, tmp_path, file_values
     ):
         import pyspark.sql.functions as F
 
@@ -486,9 +636,10 @@ class TestZoneMapPruning:
         )
         t.commit(spark, "r1")
         snap = t.latest_snapshot()
-        assert snap.column_stats["r1"]["v"] == {
-            "min": None, "max": None, "nulls": 3,
+        assert {fn: st["v"] for fn, st in snap.file_stats["r1"].items()} == {
+            fn: _plain(v) for fn, v in file_values(t, "r1", "v").items()
         }
+        assert _fold(snap, "r1", "v") == (None, None, 3)
         assert t.prune(snap, [("v", "=", "a")]) == ([], ["r1"])
         assert t.prune(snap, [("v", "is_not_null")]) == ([], ["r1"])
         assert t.prune(snap, [("v", "is_null")]) == (["r1"], [])
@@ -506,7 +657,17 @@ class TestZoneMapPruning:
         t.commit(spark, "r2")
         snap = t.latest_snapshot()
         assert t.prune(snap, [("s", ">=", "melon")]) == (["r2"], ["r1"])
-        assert t.prune(snap, [("s", "=", "banana")]) == (["r1"], ["r2"])
+        assert t.prune(snap, [("s", "=", "fig")]) == (["r1"], ["r2"])
+        # r1's two rows sit in two files (the session's 4 slices), so
+        # "banana" falls in the gap between the files' ranges and no file
+        # of r1 may match: per-file zone maps skip the run, which holds no
+        # "banana" row
+        assert sorted(
+            (st["s"]["min"], st["s"]["max"])
+            for st in snap.file_stats["r1"].values()
+        ) == [("apple", "apple"), ("fig", "fig")]
+        assert t.prune(snap, [("s", "=", "banana")]) == ([], ["r1", "r2"])
+        assert t.read(spark, filters=[("s", "=", "banana")]).count() == 0
         got = sorted(
             r.s for r in t.read(spark, filters=[("s", "=", "fig")]).collect()
         )
@@ -517,16 +678,43 @@ class TestZoneMapPruning:
 
         from moira_spark.sources.tableio import Snapshot
 
-        # a snapshot serialized before column_stats existed round-trips with
-        # empty stats and keeps every run under any filter
+        # a snapshot serialized before per-file stats existed round-trips
+        # with empty stats and keeps every run under any filter
         t = self._three_runs(spark, tmp_path)
-        snap = t.latest_snapshot()
-        d = _json.loads(snap.to_json())
-        del d["column_stats"]
+        d = _json.loads(t.latest_snapshot().to_json())
+        del d["file_stats"]
         legacy = Snapshot.from_json(_json.dumps(d))
-        assert legacy.column_stats == {}
+        assert legacy.file_stats == {}
         kept, skipped = t.prune(legacy, [("x", ">", 100)])
         assert skipped == [] and kept == ["r1", "r2", "r3"]
+
+    def test_snapshot_with_column_stats_still_reads_resumes_commits(
+        self, spark, tmp_path
+    ):
+        import json as _json
+
+        # tables committed by earlier code also stored run-level
+        # "column_stats" in every snapshot record: the key is ignored
+        t = self._three_runs(spark, tmp_path)
+        for fn in os.listdir(t.snap_dir):
+            if not fn.endswith(".json"):
+                continue
+            p = os.path.join(t.snap_dir, fn)
+            with open(p) as fh:
+                d = _json.load(fh)
+            d["column_stats"] = {r: {"x": {"u": True}} for r in d["run_ids"]}
+            os.unlink(p)  # snapshot files are hard-linked; replace whole
+            with open(p, "w") as fh:
+                _json.dump(d, fh)
+        assert sorted(r.x for r in t.read(spark).collect()) == list(range(10))
+        assert t.read(spark, filters=[("x", ">=", 8)]).count() == 2
+        assert t.is_committed("r2")
+        assert t.commit(spark, "r2").version == 3  # resume: no-op
+        t.stage(spark.range(10, 12).toDF("x"), "r4")
+        snap = t.commit(spark, "r4")
+        assert snap.version == 4 and t.read(spark).count() == 12
+        with open(os.path.join(t.snap_dir, "v4.json")) as fh:
+            assert "column_stats" not in _json.load(fh)
 
     def test_unknown_filter_op_raises(self, spark, tmp_path):
         t = self._three_runs(spark, tmp_path)
@@ -536,7 +724,8 @@ class TestZoneMapPruning:
     def test_compact_recomputes_stats_for_folded_run(self, spark, tmp_path):
         t = self._three_runs(spark, tmp_path)
         snap = t.compact(spark)
-        st = snap.column_stats[snap.run_ids[0]]
+        # target_partitions=1: the folded run is one file
+        [st] = snap.file_stats[snap.run_ids[0]].values()
         assert st["x"] == {"min": 0, "max": 9, "nulls": 0}
         assert st["y"] == {"min": 16, "max": 18, "nulls": 8}
         # pruning still sound over the compacted table
@@ -561,21 +750,23 @@ class TestFileLevelPruning:
         t.commit(spark, "r1")
         return t
 
-    def test_commit_records_per_file_stats(self, spark, tmp_path):
+    def test_commit_records_per_file_stats(self, spark, tmp_path, file_values):
         t = self._clustered(spark, tmp_path)
         snap = t.latest_snapshot()
         fstats = snap.file_stats["r1"]
         assert len(fstats) == 4  # one entry per clustered output file
-        # files cover disjoint sorted ranges and fold to the run-level stats
+        # each file's entry is exact for its own rows
+        assert {fn: st["x"] for fn, st in fstats.items()} == {
+            fn: _plain(v) for fn, v in file_values(t, "r1", "x").items()
+        }
+        # files cover disjoint sorted ranges spanning the run's values
         spans = sorted(
             (st["x"]["min"], st["x"]["max"]) for st in fstats.values()
         )
         for (_, hi), (lo, _) in zip(spans, spans[1:]):
             assert hi < lo  # disjoint: sorted write-distribution
         assert spans[0][0] == 0 and spans[-1][1] == 99
-        assert snap.column_stats["r1"]["x"] == {
-            "min": 0, "max": 99, "nulls": 0,
-        }
+        assert _fold(snap, "r1", "x") == (0, 99, 0)
 
     def test_point_read_plans_one_file_of_n(self, spark, tmp_path):
         t = self._clustered(spark, tmp_path)
@@ -615,6 +806,7 @@ class TestFileLevelPruning:
         self, spark, tmp_path
     ):
         import json as _json
+        from dataclasses import replace
 
         from moira_spark.sources.tableio import Snapshot
 
@@ -623,10 +815,14 @@ class TestFileLevelPruning:
         del d["file_stats"]
         legacy = Snapshot.from_json(_json.dumps(d))
         assert legacy.file_stats == {}
-        # run-level pruning still applies; file-level quietly disabled
-        t._write_snapshot = lambda s: None  # not persisting the legacy view
+        # no stats prove emptiness: the run is kept and read whole
         kept, _ = t.prune(legacy, [("x", "=", 42)])
         assert kept == ["r1"]
+        t._write_snapshot(replace(legacy, version=legacy.version + 1))
+        df = t.read(spark, filters=[("x", "=", 42)])
+        assert sorted(df.inputFiles()) == sorted(t.read(spark).inputFiles())
+        assert len(df.inputFiles()) == 4
+        assert [r.x for r in df.collect()] == [42]
 
     def test_merge_carries_file_stats_for_untouched_runs(
         self, spark, tmp_path
@@ -774,23 +970,33 @@ class TestTemporalZoneMaps:
             t.commit(spark, rid)
         return t
 
-    def test_commit_records_iso_bounds(self, spark, tmp_path):
+    def test_commit_records_iso_bounds(self, spark, tmp_path, file_values):
         import datetime as dt
 
         t = self._table(spark, tmp_path)
-        st = t.latest_snapshot().column_stats
-        us = lambda *a: int(  # noqa: E731
-            dt.datetime(*a, tzinfo=dt.timezone.utc).timestamp() * 1e6
+        snap = t.latest_snapshot()
+        us = lambda d: int(  # noqa: E731
+            d.replace(tzinfo=dt.timezone.utc).timestamp() * 1e6
         )
-        assert st["r1"]["ev_ts"] == {
-            "min": "2024-01-01T12:30:00",
-            "max": "2024-01-03T12:30:00",
-            "nulls": 0,
-            "ts": True,
-            # JVM-side epoch-micros twin (UTC session): the z-order probe
-            # domain, recorded at commit so no host-tz round-trip exists
-            "us": [us(2024, 1, 1, 12, 30), us(2024, 1, 3, 12, 30)],
-        }
+        for fn, vals in file_values(t, "r1", "ev_ts").items():
+            assert snap.file_stats["r1"][fn]["ev_ts"] == {
+                "min": min(vals).isoformat(),
+                "max": max(vals).isoformat(),
+                "nulls": 0,
+                "ts": True,
+                # JVM-side epoch-micros twin (UTC session): the z-order
+                # probe domain, recorded at commit so no host-tz
+                # round-trip exists
+                "us": [us(min(vals)), us(max(vals))],
+            }
+        assert _fold(snap, "r1", "ev_ts") == (
+            "2024-01-01T12:30:00", "2024-01-03T12:30:00", 0,
+        )
+        ents = [st["ev_ts"] for st in snap.file_stats["r1"].values()]
+        assert [min(e["us"][0] for e in ents), max(e["us"][1] for e in ents)] == [
+            us(dt.datetime(2024, 1, 1, 12, 30)),
+            us(dt.datetime(2024, 1, 3, 12, 30)),
+        ]
 
     def test_prune_with_datetime_literals(self, spark, tmp_path):
         import datetime as dt
@@ -817,7 +1023,9 @@ class TestTemporalZoneMaps:
         kept, _ = t.prune(snap, [("ev_ts", ">=", dt.date(2024, 2, 1))])
         assert kept == ["r3"]
 
-    def test_datetime_literal_on_date_column_is_exact(self, spark, tmp_path):
+    def test_datetime_literal_on_date_column_is_exact(
+        self, spark, tmp_path, file_values
+    ):
         import datetime as dt
 
         t = SnapshotTable(str(tmp_path / "d"))
@@ -830,7 +1038,12 @@ class TestTemporalZoneMaps:
         )
         t.commit(spark, "r1")
         snap = t.latest_snapshot()
-        assert snap.column_stats["r1"]["d"]["min"] == "2024-01-05"
+        for fn, vals in file_values(t, "r1", "d").items():
+            ent = snap.file_stats["r1"][fn]["d"]
+            assert (ent["min"], ent["max"]) == (
+                min(vals).isoformat(), max(vals).isoformat()
+            )
+        assert _fold(snap, "r1", "d")[0] == "2024-01-05"
         # midnight equality MUST keep (date casts to midnight ts)
         kept, _ = t.prune(snap, [("d", "=", dt.datetime(2024, 1, 5, 0, 0))])
         assert kept == ["r1"]
@@ -1363,7 +1576,9 @@ class TestZOrderReviewRegressions:
         assert bounds["a"] == (0.0, 7.0)
         assert bounds["b"] == (0.0, 99.0)
 
-    def test_ts_bounds_land_in_the_probe_domain(self, spark, tmp_path):
+    def test_ts_bounds_land_in_the_probe_domain(
+        self, spark, tmp_path, file_values
+    ):
         """ts stats carry JVM-computed epoch micros ("us") so z bounds sit
         in EXACTLY the unix_micros probe domain on any host timezone."""
         from moira_spark.sources.tableio import _zbounds_from_snapshot
@@ -1375,11 +1590,12 @@ class TestZOrderReviewRegressions:
         t.stage(df, "r1")
         t.commit(spark, "r1")
         snap = t.latest_snapshot()
-        ent = snap.column_stats["r1"]["ts"]
+        # exact per file, committed JVM-side
+        for fn, m in file_values(t, "r1", F.unix_micros("ts")).items():
+            assert snap.file_stats["r1"][fn]["ts"]["us"] == [min(m), max(m)]
         got = sorted(
             r.m for r in df.select(F.unix_micros("ts").alias("m")).collect()
         )
-        assert ent["us"] == [got[0], got[1]]  # exact, committed JVM-side
         lo, hi = _zbounds_from_snapshot(snap, ["ts"])["ts"]
         assert (lo, hi) == (float(got[0]), float(got[1]))
 
@@ -1400,7 +1616,8 @@ class TestZOrderReviewRegressions:
         t.stage(df, "r1")
         t.commit(spark, "r1")
         snap = t.latest_snapshot()
-        snap.column_stats["r1"]["ts"].pop("us")  # simulate a legacy snapshot
+        for st in snap.file_stats["r1"].values():
+            st["ts"].pop("us")  # simulate a legacy snapshot
         lo, hi = _zbounds_from_snapshot(snap, ["ts"])["ts"]
         want_lo = dt.datetime(
             2024, 3, 5, 6, 7, 8, tzinfo=dt.timezone.utc
