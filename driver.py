@@ -13,6 +13,11 @@ Local smoke (no cluster):
 
     python driver.py --synthetic-turns 20000 --output /tmp/out --run-id t1
 
+Every bucket's labels are already written sorted on (conv_id, turn_idx)
+(``pipeline.LABEL_SORT``), so a conversation point read plans one file per
+run from the first commit.  Nightly sorted compaction folds the many small
+runs into few large files; it is no longer what makes point reads prune.
+
 Nightly maintenance (sorted compaction + snapshot expiry, no job re-run):
 
     spark-submit --py-files pipeline.zip driver.py \\
@@ -72,8 +77,10 @@ def parse_args(argv):
     m.add_argument(
         "--compact-cluster-by",
         help="comma-separated sort keys for a SORTED compaction rewrite "
-        "(files then carry disjoint key ranges -> point reads plan one "
-        "file of --compact-partitions)",
+        "that consolidates the per-bucket runs into --compact-partitions "
+        "files with disjoint key ranges (the job already writes each run "
+        "sorted on conv_id, turn_idx, so point reads prune before "
+        "compaction too: one file per run, one file after it)",
     )
     m.add_argument("--compact-partitions", type=int, default=16)
     m.add_argument(

@@ -796,13 +796,17 @@ def kmeans_fit(
         # measured 0.33 s per iteration at k=8/dim=64; a single string
         # crosses py4j in one call and JsonToStructs over a foldable child
         # CONSTANT-FOLDS in the optimizer (verified: the optimized plan
-        # holds a plain array literal, no per-row parse).
+        # holds a plain array literal, no per-row parse).  allow_nan=False:
+        # a NaN centroid (from a NaN embedding) raises here, before any
+        # Spark job.  As a literal it would make every distance NaN; with
+        # ANSI off, every vector then silently joins one cluster with NaN
+        # inertia.
         ids = F.from_json(
             F.lit(json.dumps([int(cid) for cid, _ in cents_now])),
             "array<int>",
         )
         cvs = F.from_json(
-            F.lit(json.dumps([c for _, c in cents_now])),
+            F.lit(json.dumps([c for _, c in cents_now], allow_nan=False)),
             "array<array<double>>",
         )
         m = F.array_min(

@@ -11,6 +11,13 @@ run_id skips every committed bucket and reproduces the identical final table
 Bucketing by conv_id hash keeps conversation atomicity (a conversation is
 judged whole inside exactly one bucket — required because the conv-level
 verdict depends on all its turns).
+
+Each bucket's labels are written range-partitioned and sorted on
+``pipeline.LABEL_SORT`` = (conv_id, turn_idx), Iceberg's sorted write
+distribution.  Hash buckets span the whole conv_id range, but within a run
+every file then covers a near-disjoint conv_id slice, and the per-file zone
+maps collected at commit let ``read(filters=[("conv_id", "=", c)])`` plan
+one file per run instead of every file.
 """
 
 from __future__ import annotations
@@ -21,7 +28,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from moira_spark import config
-from moira_spark.pipeline import release_cache, run_pipeline
+from moira_spark.pipeline import LABEL_SORT, release_cache, run_pipeline
 from moira_spark.sources.tableio import SnapshotTable
 
 AUDIT_SCHEMA_DOC = (
@@ -105,17 +112,25 @@ def run_filter_job(
         slice_df = source.filter(_bucket_of(F.col("conv_id"), n_buckets) == bucket)
         labels = run_pipeline(spark, slice_df)
         bucket_run = f"{run_id}-b{bucket}"
-        labels_table.stage(labels, bucket_run)
+        labels_table.stage(labels, bucket_run, cluster_by=list(LABEL_SORT))
         wall_ms = int((time.time() - t0) * 1000)
-        staged = spark.read.parquet(labels_table.staged_dir(bucket_run))
+        # the known schema spares the schema-inference Spark job per bucket
+        staged = spark.read.schema(labels.schema).parquet(
+            labels_table.staged_dir(bucket_run)
+        )
         # commit order: audit first, labels last — a crash between the two
         # leaves an audit run whose labels are uncommitted; the next resume
         # re-runs the bucket (labels staging dir is an unreferenced orphan,
         # safe to overwrite) but MUST NOT re-stage the audit dir: it is
         # already referenced by a committed audit snapshot, and overwriting
         # it would violate snapshot immutability (a crash mid-overwrite
-        # would corrupt committed data).  The audit content is deterministic
-        # modulo wall_ms, so keeping the committed copy is exact.
+        # would corrupt committed data).  Keeping the committed copy is
+        # exact for the bucket's totals, which any re-run reproduces.  Its
+        # per-partition split is not reproducible in general: partition_id
+        # is the re-read's spark_partition_id, a grain that follows the
+        # sorted write's sampled range bounds and file-split packing
+        # (defaultParallelism, openCostInBytes), so it is stable only for a
+        # given cluster size.
         if not audit_table.is_committed(bucket_run):
             audit_table.stage(audit_rows(staged, run_id, bucket, wall_ms), bucket_run)
             audit_table.commit(spark, bucket_run, committed_keys=[key])

@@ -31,6 +31,11 @@ LABEL_COLUMNS = (
     "ppl",
     "conv_keep",
 )
+# Write order of every labels run (job buckets and streaming batches): each
+# file then covers a near-disjoint conv_id range, so the per-file zone maps
+# let a conversation point read plan one file per run.  turn_idx lets the
+# range partitioner split a hot conversation across files.
+LABEL_SORT = ("conv_id", "turn_idx")
 
 
 def score_turns(spark: SparkSession, df: DataFrame) -> DataFrame:

@@ -15,6 +15,8 @@ carries whole conversations (the generator/upstream writer emits
 conversation-atomic files), so the batch conv-agg semantics apply directly.
 For conversations split across micro-batches the audit/labels table is
 re-aggregatable downstream — the per-turn verdicts are exact either way.
+Each batch's labels are written sorted on ``pipeline.LABEL_SORT``, the
+job's layout, so conversation point reads prune files in both.
 """
 
 from __future__ import annotations
@@ -22,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from moira_spark.datagen.transcripts import PIPELINE_SCHEMA
-from moira_spark.pipeline import release_cache, run_pipeline
+from moira_spark.pipeline import LABEL_SORT, release_cache, run_pipeline
 from moira_spark.sources.tableio import SnapshotTable
 
 
@@ -56,7 +58,7 @@ def stream_labels(
         if table.is_committed(run_id):
             return  # replayed micro-batch after restart: already committed
         labels = run_pipeline(spark, batch_df)
-        table.stage(labels, run_id)
+        table.stage(labels, run_id, cluster_by=list(LABEL_SORT))
         table.commit(spark, run_id, committed_keys=[run_id])
         # Drop the pipeline's internal persisted frame — unpersisting the
         # returned `labels` plan would be a no-op (different cache entry) and

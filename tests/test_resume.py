@@ -72,6 +72,36 @@ class TestSnapshotTable:
         assert t.read(spark).count() == 7
         assert t.latest_snapshot().version == 2
 
+    def test_commit_takes_schema_from_spark_footer(self, spark, tmp_path):
+        """commit reads a staged run under the schema Spark's writer put in
+        the footer, which equals what inference gives; a file another
+        writer made has no such key, and commit infers instead."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from moira_spark.sources.tableio import _footer_schema
+
+        t = SnapshotTable(str(tmp_path / "t"))
+        df = spark.range(3).select(
+            "id",
+            F.create_map(F.lit("k"), F.col("id")).alias("m"),
+            F.array(F.lit("r")).alias("a"),
+            F.to_date(F.lit("2024-01-01")).alias("d"),
+            F.col("id").cast("decimal(10,2)").alias("x"),
+        )
+        t.stage(df, "r1")
+        d = t.staged_dir("r1")
+        inferred = spark.read.parquet(d).schema
+        assert spark.read.schema(_footer_schema(d)).parquet(d).schema == inferred
+        assert t.commit(spark, "r1").schema() == inferred
+        os.makedirs(t.staged_dir("r2"))
+        pq.write_table(
+            pa.table({"id": [7]}), os.path.join(t.staged_dir("r2"), "f.parquet")
+        )
+        assert _footer_schema(t.staged_dir("r2")) is None
+        t.commit(spark, "r2")
+        assert sorted(r.id for r in t.read(spark).collect()) == [0, 1, 2, 7]
+
     def test_time_travel(self, spark, tmp_path):
         t = SnapshotTable(str(tmp_path / "t"))
         t.stage(spark.range(3).toDF("x"), "r1")
@@ -130,6 +160,65 @@ class TestResume:
         assert got.keep.tolist() == ref.keep.tolist()
         assert got.conv_keep.tolist() == ref.conv_keep.tolist()
         assert got.scrubbed_text.tolist() == ref.scrubbed_text.tolist()
+
+
+class TestLabelLayout:
+    def test_sorted_labels_make_point_reads_plan_one_file_per_run(
+        self, spark, tmp_path
+    ):
+        """The job writes every bucket sorted on LABEL_SORT, so a
+        conversation point read plans the files holding the conversation
+        plus at most one file of each other run, and stays exact.  With 16
+        files per run the hot conversation (150 turns) outgrows 1.5 files
+        of its bucket (~1500 rows), so the files stay balanced only if the
+        composite key splits it."""
+        from collections import Counter, defaultdict
+
+        from moira_spark.pipeline import LABEL_SORT
+
+        # read from parquet as driver.py does: an in-memory source gets
+        # coalesced into one file per run, which hides the layout
+        tg.gen_spark(spark, N_TURNS).write.parquet(str(tmp_path / "in"))
+        old = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", "16")
+        try:
+            table = run_filter_job(
+                spark, spark.read.parquet(str(tmp_path / "in")),
+                str(tmp_path / "job"), "lay", n_buckets=3,
+            )
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", old)
+        snap = table.latest_snapshot()
+        run_of, rows_of, holding = {}, {}, defaultdict(set)
+        for run in snap.run_ids:
+            d = table.staged_dir(run)
+            for fn in sorted(os.listdir(d)):
+                if fn.endswith(".parquet"):
+                    keys = [
+                        tuple(r) for r in spark.read.parquet(os.path.join(d, fn))
+                        .select(*LABEL_SORT).collect()
+                    ]
+                    assert keys == sorted(keys), fn  # sorted within the file
+                    run_of[fn], rows_of[fn] = run, len(keys)
+                    for conv, _ in keys:
+                        holding[conv].add(fn)
+        for run in snap.run_ids:
+            sizes = [n for fn, n in rows_of.items() if run_of[fn] == run]
+            assert max(sizes) <= 1.5 * sum(sizes) / len(sizes), (run, sizes)
+        assert len(holding[tg.HOT_CONV_ID]) >= 2  # the hot conv is split
+
+        full = defaultdict(list)
+        for r in table.read(spark).collect():
+            full[r.conv_id].append(r)
+        assert set(full) == set(holding)
+        for conv, files in holding.items():
+            df = table.read(spark, filters=[("conv_id", "=", conv)])
+            planned = {os.path.basename(f) for f in df.inputFiles()}
+            assert files <= planned, conv
+            others = Counter(run_of[fn] for fn in planned - files)
+            assert all(n <= 1 for n in others.values()), (conv, others)
+            assert not set(others) & {run_of[fn] for fn in files}, conv
+            assert sorted(df.collect()) == sorted(full[conv]), conv
 
 
 class TestAuditRows:

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 from moira_spark.kernels import ann
 
@@ -70,3 +71,17 @@ def test_ivf_adc_shortlist_bounds_exact_work(spark):
     # 10 queries x at most 25 exact-scored rows each
     assert stats["n_exact"] <= 250
     assert stats["n_candidates"] >= stats["n_exact"]
+
+
+def test_kmeans_nan_embedding_raises(spark):
+    # a NaN init vector makes a NaN centroid: its literal must raise on the
+    # driver, not make every distance NaN inside the Lloyd iterations
+    from moira_spark.harness.similarity import kmeans_fit
+
+    rows = [(i, [float(i), 1.0, -float(i)]) for i in range(6)]
+    schema = "vec_id long, v array<double>"
+    fit = kmeans_fit(spark.createDataFrame(rows, schema), k=2, iters=1)
+    assert fit.filter("cluster >= 0").count() == 2  # finite input fits
+    rows[1] = (1, [float("nan"), 1.0, -1.0])
+    with pytest.raises(ValueError, match="JSON compliant"):
+        kmeans_fit(spark.createDataFrame(rows, schema), k=2, iters=1)
