@@ -238,31 +238,6 @@ def _stats_entry(mn, mx, nulls, kind: str = "plain", us=None) -> dict:
     return {"min": mn, "max": mx, "nulls": nulls}
 
 
-# footer key where Spark's parquet writer records the Catalyst schema
-_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
-
-
-def _footer_schema(run_dir: str) -> "StructType | None":
-    """A staged run dir's schema as Spark's writer recorded it in one
-    file's footer, read on the driver.  Inference without mergeSchema
-    takes the schema from that key of a single footer too (one write job
-    stages a run, so its files agree), and a file source reads every
-    column as nullable either way, so reading under it gives the inferred
-    schema without the Spark job inference runs, one per commit.  None
-    when there is no file or it lacks the key (not written by Spark): the
-    caller infers as before."""
-    import pyarrow.parquet as pq
-
-    if not os.path.isdir(run_dir):
-        return None
-    for fn in sorted(os.listdir(run_dir)):
-        if fn.endswith(".parquet"):
-            meta = pq.read_schema(os.path.join(run_dir, fn)).metadata or {}
-            js = meta.get(_SPARK_SCHEMA_KEY)
-            return None if js is None else StructType.fromJson(json.loads(js))
-    return None
-
-
 def _collect_stats(df: DataFrame) -> tuple[int, dict]:
     """One grouped agg pass over a staged run: per-FILE min/max/null-count
     for every stats-supported column (the per-file metrics an Iceberg
@@ -746,10 +721,7 @@ class SnapshotTable:
         schema)``."""
         if df is not None:
             self.stage(df, run_id, **stage_kw)
-        path = self.staged_dir(run_id)
-        schema = _footer_schema(path)
-        reader = spark.read if schema is None else spark.read.schema(schema)
-        staged = reader.parquet(path)
+        staged = spark.read.parquet(self.staged_dir(run_id))
         return (*_collect_stats(staged), staged.schema)
 
     def commit(

@@ -72,36 +72,6 @@ class TestSnapshotTable:
         assert t.read(spark).count() == 7
         assert t.latest_snapshot().version == 2
 
-    def test_commit_takes_schema_from_spark_footer(self, spark, tmp_path):
-        """commit reads a staged run under the schema Spark's writer put in
-        the footer, which equals what inference gives; a file another
-        writer made has no such key, and commit infers instead."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from moira_spark.sources.tableio import _footer_schema
-
-        t = SnapshotTable(str(tmp_path / "t"))
-        df = spark.range(3).select(
-            "id",
-            F.create_map(F.lit("k"), F.col("id")).alias("m"),
-            F.array(F.lit("r")).alias("a"),
-            F.to_date(F.lit("2024-01-01")).alias("d"),
-            F.col("id").cast("decimal(10,2)").alias("x"),
-        )
-        t.stage(df, "r1")
-        d = t.staged_dir("r1")
-        inferred = spark.read.parquet(d).schema
-        assert spark.read.schema(_footer_schema(d)).parquet(d).schema == inferred
-        assert t.commit(spark, "r1").schema() == inferred
-        os.makedirs(t.staged_dir("r2"))
-        pq.write_table(
-            pa.table({"id": [7]}), os.path.join(t.staged_dir("r2"), "f.parquet")
-        )
-        assert _footer_schema(t.staged_dir("r2")) is None
-        t.commit(spark, "r2")
-        assert sorted(r.id for r in t.read(spark).collect()) == [0, 1, 2, 7]
-
     def test_time_travel(self, spark, tmp_path):
         t = SnapshotTable(str(tmp_path / "t"))
         t.stage(spark.range(3).toDF("x"), "r1")
