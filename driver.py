@@ -48,7 +48,14 @@ def parse_args(argv):
     )
     p.add_argument("--output", required=True, help="output table root dir")
     p.add_argument("--run-id", required=True)
-    p.add_argument("--buckets", type=int, default=16)
+    p.add_argument(
+        "--buckets",
+        type=int,
+        default=16,
+        help="conv_id hash buckets, each filtered and committed as one "
+        "snapshot; more buckets also shrink each bucket's broadcast "
+        "conversation-verdict table",
+    )
     p.add_argument("--cores", type=int, default=None, help="local[N] (local runs only)")
     p.add_argument(
         "--export-good-jsonl",
@@ -60,11 +67,6 @@ def parse_args(argv):
         type=int,
         default=None,
         help="shard count for --export-good-jsonl (default: upstream partitioning)",
-    )
-    p.add_argument(
-        "--no-broadcast-verdicts",
-        action="store_true",
-        help="force shuffle join for the conversation-verdict join-back",
     )
     # table maintenance (nightly pass on the labels SnapshotTable; combine
     # with --maintain-only to run maintenance without re-running the job)

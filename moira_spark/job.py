@@ -6,7 +6,9 @@ bucket is filtered, staged, audited, and committed as one snapshot.  A crash
 — executor or driver — loses at most the in-flight bucket, whose staging
 directory is invisible to readers (sources/tableio.py); re-running the same
 run_id skips every committed bucket and reproduces the identical final table
-(pytest-pinned in tests/test_resume.py).
+(pytest-pinned in tests/test_resume.py).  "Committed" has one rule for the
+labels and audit tables alike, ``SnapshotTable.is_committed(bucket_run)``:
+it also counts runs a compaction or merge has since folded away.
 
 Bucketing by conv_id hash keeps conversation atomicity (a conversation is
 judged whole inside exactly one bucket — required because the conv-level
@@ -99,19 +101,13 @@ def run_filter_job(
     audit_table = SnapshotTable(f"{output_dir}/audit")
 
     done = 0
-    committed = set(
-        (labels_table.latest_snapshot().committed_keys)
-        if labels_table.latest_snapshot()
-        else []
-    )
     for bucket in range(n_buckets):
-        key = f"{run_id}/bucket={bucket}"
-        if key in committed:
-            continue  # resume: this slice is already in the committed table
+        bucket_run = f"{run_id}-b{bucket}"
+        if labels_table.is_committed(bucket_run):
+            continue  # resume: committed, possibly since folded by maintenance
         t0 = time.time()
         slice_df = source.filter(_bucket_of(F.col("conv_id"), n_buckets) == bucket)
         labels = run_pipeline(spark, slice_df)
-        bucket_run = f"{run_id}-b{bucket}"
         labels_table.stage(labels, bucket_run, cluster_by=list(LABEL_SORT))
         wall_ms = int((time.time() - t0) * 1000)
         # the known schema spares the schema-inference Spark job per bucket
@@ -133,8 +129,8 @@ def run_filter_job(
         # given cluster size.
         if not audit_table.is_committed(bucket_run):
             audit_table.stage(audit_rows(staged, run_id, bucket, wall_ms), bucket_run)
-            audit_table.commit(spark, bucket_run, committed_keys=[key])
-        labels_table.commit(spark, bucket_run, committed_keys=[key])
+            audit_table.commit(spark, bucket_run)
+        labels_table.commit(spark, bucket_run)
         # Release the pipeline's internal persisted frame so the cache does
         # not grow by one MEMORY_AND_DISK copy per bucket.
         release_cache(labels)

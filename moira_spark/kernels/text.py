@@ -114,12 +114,6 @@ def top_ngram_stats(
     return best / total_chars, True
 
 
-def top_ngram_char_frac(toks: list[str], n: int, total_chars: int | None = None) -> float:
-    if total_chars is None:
-        total_chars = sum(len(t) for t in toks)
-    return top_ngram_stats(toks, n, total_chars)[0]
-
-
 def repetition_rule_fails(text: str) -> bool:
     """Per-text implementation.
 

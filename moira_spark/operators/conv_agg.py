@@ -14,9 +14,10 @@ aggregation —
            -> partial bad-turn counts, S-way fan-out of the hot key
   phase 2: groupBy(conv_id)         -> sum of S partials (tiny input)
 
-The verdict table (one row per conversation) is then joined back.  For
-bounded conv counts it is broadcast; above the threshold we fall back to a
-shuffle join on conv_id, which AQE can further skew-split.
+The verdict table (one narrow row per conversation) is then broadcast and
+joined back — always; there is no size threshold.  Its size is bounded by
+the caller's slice: one conv_id hash bucket of the job (``driver.py
+--buckets`` is the lever) or one streaming micro-batch.
 """
 
 from __future__ import annotations
@@ -27,12 +28,12 @@ from pyspark.sql import DataFrame
 from moira_spark import config
 
 
-def conversation_verdicts(turns: DataFrame, keep_col: str = "keep") -> DataFrame:
+def conversation_verdicts(turns: DataFrame) -> DataFrame:
     """-> DataFrame(conv_id, bad_turns, conv_keep), salted two-phase agg."""
     salt = F.pmod(F.hash(F.col("turn_idx")), F.lit(config.CONV_AGG_SALT_BUCKETS))
     partial = (
         turns.groupBy(F.col("conv_id"), salt.alias("_salt"))
-        .agg(F.count(F.when(~F.col(keep_col), True)).alias("_bad_partial"))
+        .agg(F.count(F.when(~F.col("keep"), True)).alias("_bad_partial"))
     )
     return (
         partial.groupBy("conv_id")
@@ -43,17 +44,7 @@ def conversation_verdicts(turns: DataFrame, keep_col: str = "keep") -> DataFrame
     )
 
 
-def attach_conv_verdicts(
-    turns: DataFrame, verdicts: DataFrame, broadcast_verdicts: bool = True
-) -> DataFrame:
-    """Join the per-conversation verdict back onto every turn.
-
-    broadcast_verdicts=True is right whenever the verdict table fits in
-    executor memory (it is one narrow row per conversation).  At extreme
-    conversation cardinality pass False: the shuffle join keys match the
-    phase-2 aggregation's partitioning, so Spark reuses the exchange.
-    """
-    v = verdicts.select("conv_id", "conv_keep")
-    if broadcast_verdicts:
-        v = F.broadcast(v)
+def attach_conv_verdicts(turns: DataFrame, verdicts: DataFrame) -> DataFrame:
+    """Broadcast-join the per-conversation verdict back onto every turn."""
+    v = F.broadcast(verdicts.select("conv_id", "conv_keep"))
     return turns.join(v, "conv_id", "left")

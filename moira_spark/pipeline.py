@@ -112,35 +112,24 @@ def score_turns_stream(spark: SparkSession, df: DataFrame) -> DataFrame:
     return df.withColumn("reasons", reasons).withColumn("keep", keep)
 
 
-def run_pipeline(
-    spark: SparkSession,
-    df: DataFrame,
-    broadcast_verdicts: bool = True,
-    persist_scored: bool = True,
-) -> DataFrame:
+def run_pipeline(spark: SparkSession, df: DataFrame) -> DataFrame:
     """Full pipeline -> label frame (FIXTURES.md §2 schema).
 
-    ``persist_scored`` matters: the scored frame feeds BOTH the per-turn
+    The scored frame is persisted because it feeds BOTH the per-turn
     output and the conversation-verdict aggregation.  Without persistence
     Spark recomputes the whole upstream plan — including the Arrow UDF
     stack — once per branch (verified via explain(); the plan showed two
-    ArrowEvalPython subtrees).  At scale the equivalent is write-once to the
-    staging table and re-scan (sources/tableio.py), which prunes to
-    (conv_id, keep) for the agg branch.
+    ArrowEvalPython subtrees).
     """
-    scored = score_turns(spark, df)
-    if persist_scored:
-        scored = scored.persist()
+    scored = score_turns(spark, df).persist()
     verdicts = conv_agg.conversation_verdicts(scored)
-    labeled = conv_agg.attach_conv_verdicts(
-        scored, verdicts, broadcast_verdicts=broadcast_verdicts
-    )
+    labeled = conv_agg.attach_conv_verdicts(scored, verdicts)
     out = labeled.select(*LABEL_COLUMNS)
     # Hand the internally-persisted frame to the caller: unpersisting the
     # *returned* plan would be a no-op (Dataset.unpersist only drops the cache
     # entry for that exact plan), so long-running callers (bucketed job,
     # foreachBatch streaming) use release_cache() after each commit.
-    out._moira_scored = scored if persist_scored else None
+    out._moira_scored = scored
     # Also expose the pre-projection frame (labels + the pass-through
     # role/tool/ts columns): filtered_output uses it to avoid re-running the
     # dedupe window and a join over the whole source just to recover columns
@@ -153,7 +142,7 @@ def release_cache(labels: DataFrame) -> None:
     """Unpersist the frame run_pipeline() cached while building ``labels``.
 
     Call after the labels have been materialized/committed; a no-op for
-    frames not produced by run_pipeline or run with persist_scored=False.
+    frames not produced by run_pipeline.
     """
     scored = getattr(labels, "_moira_scored", None)
     if scored is not None:

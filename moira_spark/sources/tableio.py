@@ -9,12 +9,11 @@ real Iceberg catalog is a drop-in replacement later:
     table_dir/
       data/run_id=<run>/part-*.parquet     (staged by Spark writers)
       _snapshots/v<N>.json                 (atomic commit records)
-      _snapshots/LATEST                    (pointer, written last via rename)
 
 A snapshot lists the data directories (by run_id) that are part of the table
-plus bookkeeping (row counts, committed conversation-partition ids).  Readers
-resolve LATEST and read only committed run dirs — a crashed writer leaves an
-orphaned staging dir that no snapshot references, so re-running the same
+plus bookkeeping (row counts, idempotency keys).  Readers resolve the
+highest v<N>.json and read only committed run dirs — a crashed writer leaves
+an orphaned staging dir that no snapshot references, so re-running the same
 run_id is idempotent: the orphan is overwritten, and commit happens once.
 This is exactly Iceberg's optimistic snapshot protocol with run-directory
 granularity instead of per-file manifests (sufficient here because each run
@@ -32,9 +31,7 @@ writer (commit, compact, merge, rollback) publishes through one CAS loop
 (``SnapshotTable._commit``): a writer that loses the race re-reads the
 fresh snapshot and rebuilds its change on top of it, exactly Iceberg's
 commit loop; the loser of a compact-vs-append race therefore re-folds the
-appended rows instead of silently dropping them.  LATEST is a convenience
-hint; readers resolve the maximum v<N>.json so a stale pointer can never
-hide a committed snapshot.
+appended rows instead of silently dropping them.
 """
 
 from __future__ import annotations
@@ -559,11 +556,10 @@ class SnapshotTable:
 
     # ------------------------------------------------------------- snapshots
     def latest_snapshot(self) -> Snapshot | None:
-        """Highest committed snapshot.  Resolved by scanning v<N>.json names
-        (immutable once linked into place), NOT by trusting LATEST: two
-        racing writers swing the pointer in commit order only by luck, and
-        a stale pointer must never hide a committed snapshot.  LATEST is
-        still maintained as a human-readable hint."""
+        """Highest committed snapshot, resolved by scanning v<N>.json names
+        (immutable once linked into place).  No pointer file is consulted:
+        racing writers would swing one in commit order only by luck, and a
+        stale pointer must never hide a committed snapshot."""
         versions = [
             int(n[1:-5])
             for n in os.listdir(self.snap_dir)
@@ -582,8 +578,7 @@ class SnapshotTable:
         and fails with FileExistsError when the version exists, so readers
         can never observe a partial snapshot and no two writers can both
         claim the same version (the CAS of Iceberg's commit protocol)."""
-        name = f"v{snap.version}.json"
-        path = os.path.join(self.snap_dir, name)
+        path = os.path.join(self.snap_dir, f"v{snap.version}.json")
         fd, tmp = tempfile.mkstemp(dir=self.snap_dir)
         try:
             with os.fdopen(fd, "w") as f:
@@ -599,13 +594,6 @@ class SnapshotTable:
                 ) from None
         finally:
             os.unlink(tmp)
-        # best-effort hint; correctness never depends on it
-        fd, tmp = tempfile.mkstemp(dir=self.snap_dir)
-        with os.fdopen(fd, "w") as f:
-            f.write(name)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, os.path.join(self.snap_dir, "LATEST"))  # atomic
 
     # ------------------------------------------------------------ write path
     def staged_dir(self, run_id: str) -> str:
@@ -782,10 +770,10 @@ class SnapshotTable:
         bucket or micro-batch; at 100 TB that means small-file explosion
         and a scan that unions thousands of directories.  Compaction is
         data-identical (row set unchanged; committed_keys preserved AND the
-        folded run_ids move to retired_run_ids, so both resume paths —
-        job.py's key-based skip and the streaming replay guard's
-        is_committed(run_id) — still treat finished work as done); prior
-        snapshots still time-travel until vacuum() expires their data.
+        folded run_ids move to retired_run_ids, so is_committed(run_id) —
+        the resume rule of job buckets and streaming batches — still
+        treats finished work as done); prior snapshots still time-travel
+        until vacuum() expires their data.
 
         A commit landing between the snapshot read and the snapshot write
         (e.g. a live foreachBatch micro-batch — the exact workload

@@ -5,9 +5,9 @@ The product pipeline is batch-first with snapshot resume (BASELINE.json:6 —
 stateless and runs unchanged under Structured Streaming.  This module wires
 it up for continuous ingestion:
 
-  readStream(parquet dir) -> watermark(ts) -> per-turn scoring (native rules
-  + the same fused Arrow UDF) -> foreachBatch: conversation verdicts +
-  snapshot-table append.
+  readStream(parquet dir) -> foreachBatch: ``run_pipeline`` on the batch
+  (dedupe, native rules, the same fused Arrow UDF, conversation verdicts)
+  + snapshot-table append.
 
 Conversation-level verdicts are computed per micro-batch inside
 ``foreachBatch`` (Spark's documented reuse pattern): each arriving batch
@@ -33,13 +33,10 @@ def stream_labels(
     input_dir: str,
     output_dir: str,
     checkpoint_dir: str,
-    watermark: str = "1 hour",
     max_files_per_trigger: int | None = None,
 ):
     """Start (or define) the streaming query; returns the StreamingQuery.
 
-    Late rows beyond ``watermark`` on ts are still scored (stateless path);
-    the watermark exists to bound any downstream stateful consumers.
     ``max_files_per_trigger`` bounds each micro-batch (and under
     availableNow forces a multi-batch run — useful to exercise the
     per-batch commit/replay protocol).
@@ -48,7 +45,7 @@ def stream_labels(
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    src: DataFrame = reader.parquet(input_dir).withWatermark("ts", watermark)
+    src: DataFrame = reader.parquet(input_dir)
     table = SnapshotTable(output_dir)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -59,7 +56,7 @@ def stream_labels(
             return  # replayed micro-batch after restart: already committed
         labels = run_pipeline(spark, batch_df)
         table.stage(labels, run_id, cluster_by=list(LABEL_SORT))
-        table.commit(spark, run_id, committed_keys=[run_id])
+        table.commit(spark, run_id)
         # Drop the pipeline's internal persisted frame — unpersisting the
         # returned `labels` plan would be a no-op (different cache entry) and
         # would leak one cached copy per micro-batch.

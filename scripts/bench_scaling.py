@@ -494,7 +494,7 @@ turns/s at the measured per-core rate of the 2-cpu config, putting 10^12
 turns at ~{1e12/(results['pipeline'][2]/2*4000)/3600:.0f} hours of cluster
 time with zero all-to-all shuffles of the text payload.
 
-## Appendix: salting A/B (scripts/ab_salting.py)
+## Appendix: salting A/B (one-off script, removed; in git history)
 
 Plain groupBy(conv_id) vs the salted two-phase aggregation on the 1M-turn
 table whose hot conversation holds 5% of all turns (local[8], warm
@@ -502,8 +502,8 @@ best-of-3): plain 1.18s, salted 1.38s, identical results.  For ALGEBRAIC
 aggregations Spark's map-side partial aggregation already defuses the hot
 key (the hot conversation's reducer receives one partial per map task, not
 one row per turn) — so the salted path is kept as spec-pinned insurance for
-the holistic cases (collect_list payloads, non-broadcast verdict joins),
-where a hot key genuinely straggles.
+the holistic cases (e.g. collect_list payloads), where a hot key
+genuinely straggles.
 
 ## Appendix: hot-shingle capping A/B (scripts/ab_shingle_cap.py)
 

@@ -116,6 +116,56 @@ class TestResume:
         audit = SnapshotTable(f"{out_dir}/audit").read(spark).toPandas()
         assert sorted(audit.snapshot_bucket.unique().tolist()) == [0, 1, 2, 3]
 
+    @pytest.mark.parametrize("maintenance", ["compact", "cow_merge"])
+    def test_rerun_after_maintenance_commits_nothing(
+        self, spark, tmp_path, monkeypatch, maintenance
+    ):
+        """Maintenance folds bucket runs into retired_run_ids; re-running
+        the finished job must still skip every bucket (is_committed counts
+        retired runs): nothing is staged — a retired run's dir is still
+        referenced by older snapshots — no labels or audit version appears,
+        and the table is unchanged."""
+        import pandas as pd
+
+        src = tg.gen_spark(spark, N_TURNS)
+        out = str(tmp_path / "job")
+        labels = run_filter_job(spark, src, out, "maint", n_buckets=3)
+        audit = SnapshotTable(f"{out}/audit")
+        buckets = {f"maint-b{b}" for b in range(3)}
+        if maintenance == "compact":
+            labels.compact(spark)
+            assert set(labels.latest_snapshot().retired_run_ids) == buckets
+        else:
+            first = labels.read(spark).orderBy("conv_id", "turn_idx").limit(1)
+            upd = spark.createDataFrame(first.collect(), first.schema)
+            labels.merge(
+                spark,
+                upd.withColumn("scrubbed_text", F.lit("[redacted]")),
+                ["conv_id", "turn_idx"],
+                merge_id="redact",
+                mode="cow",
+            )
+            retired = labels.latest_snapshot().retired_run_ids
+            assert len(retired) == 1 and retired[0] in buckets
+
+        def state():
+            pdf = _final_state(spark, labels)
+            return (
+                labels.latest_snapshot().version,
+                audit.latest_snapshot().version,
+                pdf.assign(reasons=pdf.reasons.map(tuple)),
+            )
+
+        *versions, before = state()
+        monkeypatch.setattr(
+            SnapshotTable, "stage",
+            lambda self, df, run_id, **kw: pytest.fail(f"re-staged {run_id}"),
+        )
+        run_filter_job(spark, src, out, "maint", n_buckets=3)
+        *versions_after, after = state()
+        assert versions_after == versions
+        pd.testing.assert_frame_equal(after, before)
+
     def test_conversation_atomicity(self, spark, tmp_path):
         """Every conversation is judged whole inside one bucket: the bucketed
         job's verdicts equal the single-pipeline verdicts."""
@@ -277,14 +327,13 @@ class TestCrashBetweenCommits:
 
         # manually reproduce bucket 0 up to the crash point
         run_id, bucket, n_buckets = "between", 0, 2
-        key = f"{run_id}/bucket={bucket}"
         bucket_run = f"{run_id}-b{bucket}"
         slice_df = src.filter(_bucket_of(F.col("conv_id"), n_buckets) == bucket)
         labels = run_pipeline(spark, slice_df)
         labels_table.stage(labels, bucket_run)
         staged = spark.read.parquet(labels_table.staged_dir(bucket_run))
         audit_table.stage(audit_rows(staged, run_id, bucket, 0), bucket_run)
-        audit_table.commit(spark, bucket_run, committed_keys=[key])
+        audit_table.commit(spark, bucket_run)
         release_cache(labels)
         # <crash here: labels for bucket 0 never committed>
 
