@@ -37,6 +37,13 @@ import sys
 import time
 
 
+def _positive_int(text: str) -> int:
+    n = int(text)
+    if n < 1:
+        raise argparse.ArgumentTypeError(f"must be >= 1, got {n}")
+    return n
+
+
 def parse_args(argv):
     p = argparse.ArgumentParser(description=__doc__)
     p.add_argument("--input", help="input transcripts table (parquet dir)")
@@ -50,11 +57,12 @@ def parse_args(argv):
     p.add_argument("--run-id", required=True)
     p.add_argument(
         "--buckets",
-        type=int,
+        type=_positive_int,
         default=16,
-        help="conv_id hash buckets, each filtered and committed as one "
-        "snapshot; more buckets also shrink each bucket's broadcast "
-        "conversation-verdict table",
+        help="conv_id hash buckets (>= 1), each filtered and committed as "
+        "one snapshot; the next bucket stages while the current one "
+        "commits, yet one bucket is still cached at a time; more buckets "
+        "also shrink each bucket's broadcast conversation-verdict table",
     )
     p.add_argument("--cores", type=int, default=None, help="local[N] (local runs only)")
     p.add_argument(

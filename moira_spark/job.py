@@ -2,9 +2,12 @@
 
 The production entry (driver script for ``spark-submit --py-files``): the
 input conversation space is split into ``n_buckets`` hash buckets; each
-bucket is filtered, staged, audited, and committed as one snapshot.  A crash
-— executor or driver — loses at most the in-flight bucket, whose staging
-directory is invisible to readers (sources/tableio.py); re-running the same
+bucket is filtered, staged, audited, and committed as one snapshot.  The
+bucket loop is a two-stage pipeline: a background thread stages bucket b+1
+while the caller's thread audits and commits bucket b, in bucket order.  A
+crash — executor or driver — therefore loses at most two buckets of work,
+the one committing and the one staging, and both live only in staging
+directories invisible to readers (sources/tableio.py); re-running the same
 run_id skips every committed bucket and reproduces the identical final table
 (pytest-pinned in tests/test_resume.py).  "Committed" has one rule for the
 labels and audit tables alike, ``SnapshotTable.is_committed(bucket_run)``:
@@ -25,8 +28,10 @@ one file per run instead of every file.
 from __future__ import annotations
 
 import time
+from concurrent.futures import ThreadPoolExecutor
 
 import pyspark.sql.functions as F
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 
 from moira_spark import config
@@ -94,47 +99,75 @@ def run_filter_job(
 ) -> SnapshotTable:
     """Filter ``source`` into ``output_dir`` (labels + audit tables).
 
+    One worker thread stages the next bucket's labels while this thread
+    audits and commits the current one.  Commits stay in bucket order, so
+    the committed buckets always form a prefix of the buckets to do; a
+    staging error is raised once every earlier bucket has committed.
+
     ``fail_after_buckets`` is a test hook: raise after committing that many
-    buckets, simulating a driver crash mid-job.
+    buckets, simulating a driver crash mid-job (the bucket staging in the
+    background is left an uncommitted orphan).
     """
+    if n_buckets < 1:
+        raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
     labels_table = SnapshotTable(f"{output_dir}/labels")
     audit_table = SnapshotTable(f"{output_dir}/audit")
+    # resume: skip buckets committed, possibly since folded by maintenance
+    todo = [
+        b for b in range(n_buckets)
+        if not labels_table.is_committed(f"{run_id}-b{b}")
+    ]
 
-    done = 0
-    for bucket in range(n_buckets):
-        bucket_run = f"{run_id}-b{bucket}"
-        if labels_table.is_committed(bucket_run):
-            continue  # resume: committed, possibly since folded by maintenance
+    def stage(bucket: int):
         t0 = time.time()
         slice_df = source.filter(_bucket_of(F.col("conv_id"), n_buckets) == bucket)
         labels = run_pipeline(spark, slice_df)
-        labels_table.stage(labels, bucket_run, cluster_by=list(LABEL_SORT))
-        wall_ms = int((time.time() - t0) * 1000)
-        # the known schema spares the schema-inference Spark job per bucket
-        staged = spark.read.schema(labels.schema).parquet(
-            labels_table.staged_dir(bucket_run)
-        )
-        # commit order: audit first, labels last — a crash between the two
-        # leaves an audit run whose labels are uncommitted; the next resume
-        # re-runs the bucket (labels staging dir is an unreferenced orphan,
-        # safe to overwrite) but MUST NOT re-stage the audit dir: it is
-        # already referenced by a committed audit snapshot, and overwriting
-        # it would violate snapshot immutability (a crash mid-overwrite
-        # would corrupt committed data).  Keeping the committed copy is
-        # exact for the bucket's totals, which any re-run reproduces.  Its
-        # per-partition split is not reproducible in general: partition_id
-        # is the re-read's spark_partition_id, a grain that follows the
-        # sorted write's sampled range bounds and file-split packing
-        # (defaultParallelism, openCostInBytes), so it is stable only for a
-        # given cluster size.
-        if not audit_table.is_committed(bucket_run):
-            audit_table.stage(audit_rows(staged, run_id, bucket, wall_ms), bucket_run)
-            audit_table.commit(spark, bucket_run)
-        labels_table.commit(spark, bucket_run)
-        # Release the pipeline's internal persisted frame so the cache does
-        # not grow by one MEMORY_AND_DISK copy per bucket.
-        release_cache(labels)
-        done += 1
-        if fail_after_buckets is not None and done >= fail_after_buckets:
-            raise RuntimeError(f"injected crash after {done} buckets")
+        try:
+            labels_table.stage(labels, f"{run_id}-b{bucket}", cluster_by=list(LABEL_SORT))
+        finally:
+            # The audit and both commits read the staged files, not the
+            # cache: releasing here keeps one bucket's persisted scored
+            # frame alive at a time, even with the next bucket staging.
+            release_cache(labels)
+        return labels.schema, int((time.time() - t0) * 1000)
+
+    # Exiting the pool waits for an in-flight staging run, so a failed job
+    # never leaves a thread writing a staging dir its resume will overwrite
+    # (that run's own result is dropped: the job is already failing).
+    with ThreadPoolExecutor(max_workers=1) as pool:
+
+        def submit(i: int):
+            # wrapped per submit: the worker inherits this thread's Spark
+            # local properties (job description) and session tags as of now
+            return pool.submit(inheritable_thread_target(spark)(stage), todo[i])
+
+        pending = submit(0) if todo else None
+        for i, bucket in enumerate(todo):
+            schema, wall_ms = pending.result()
+            pending = submit(i + 1) if i + 1 < len(todo) else None
+            bucket_run = f"{run_id}-b{bucket}"
+            # the known schema spares the schema-inference Spark job per bucket
+            staged = spark.read.schema(schema).parquet(
+                labels_table.staged_dir(bucket_run)
+            )
+            # commit order: audit first, labels last — a crash between the
+            # two leaves an audit run whose labels are uncommitted; the next
+            # resume re-runs the bucket (labels staging dir is an
+            # unreferenced orphan, safe to overwrite) but MUST NOT re-stage
+            # the audit dir: it is already referenced by a committed audit
+            # snapshot, and overwriting it would violate snapshot
+            # immutability (a crash mid-overwrite would corrupt committed
+            # data).  Keeping the committed copy is exact for the bucket's
+            # totals, which any re-run reproduces.  Its per-partition split
+            # is not reproducible in general: partition_id is the re-read's
+            # spark_partition_id, a grain that follows the sorted write's
+            # sampled range bounds and file-split packing
+            # (defaultParallelism, openCostInBytes), so it is stable only
+            # for a given cluster size.
+            if not audit_table.is_committed(bucket_run):
+                audit_table.stage(audit_rows(staged, run_id, bucket, wall_ms), bucket_run)
+                audit_table.commit(spark, bucket_run)
+            labels_table.commit(spark, bucket_run)
+            if fail_after_buckets is not None and i + 1 >= fail_after_buckets:
+                raise RuntimeError(f"injected crash after {i + 1} buckets")
     return labels_table

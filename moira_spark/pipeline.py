@@ -128,7 +128,7 @@ def run_pipeline(spark: SparkSession, df: DataFrame) -> DataFrame:
     # Hand the internally-persisted frame to the caller: unpersisting the
     # *returned* plan would be a no-op (Dataset.unpersist only drops the cache
     # entry for that exact plan), so long-running callers (bucketed job,
-    # foreachBatch streaming) use release_cache() after each commit.
+    # foreachBatch streaming) use release_cache() once the labels are staged.
     out._moira_scored = scored
     # Also expose the pre-projection frame (labels + the pass-through
     # role/tool/ts columns): filtered_output uses it to avoid re-running the
@@ -141,7 +141,7 @@ def run_pipeline(spark: SparkSession, df: DataFrame) -> DataFrame:
 def release_cache(labels: DataFrame) -> None:
     """Unpersist the frame run_pipeline() cached while building ``labels``.
 
-    Call after the labels have been materialized/committed; a no-op for
+    Call once the labels have been materialized (staged); a no-op for
     frames not produced by run_pipeline.
     """
     scored = getattr(labels, "_moira_scored", None)

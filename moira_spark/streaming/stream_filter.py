@@ -55,12 +55,16 @@ def stream_labels(
         if table.is_committed(run_id):
             return  # replayed micro-batch after restart: already committed
         labels = run_pipeline(spark, batch_df)
-        table.stage(labels, run_id, cluster_by=list(LABEL_SORT))
+        try:
+            table.stage(labels, run_id, cluster_by=list(LABEL_SORT))
+        finally:
+            # Drop the pipeline's internal persisted frame once the batch is
+            # staged (the commit reads the staged files), and on a failed
+            # stage too — unpersisting the returned `labels` plan would be a
+            # no-op (different cache entry) and would leak one cached copy
+            # per micro-batch.
+            release_cache(labels)
         table.commit(spark, run_id)
-        # Drop the pipeline's internal persisted frame — unpersisting the
-        # returned `labels` plan would be a no-op (different cache entry) and
-        # would leak one cached copy per micro-batch.
-        release_cache(labels)
 
     return (
         src.writeStream.foreachBatch(process_batch)

@@ -166,6 +166,98 @@ class TestResume:
         assert versions_after == versions
         pd.testing.assert_frame_equal(after, before)
 
+    def test_lookahead_stage_error_keeps_committed_prefix(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """Bucket b+1 stages while bucket b commits.  A staging error in
+        the look-ahead bucket surfaces from the job only after every
+        earlier bucket committed: labels and audit hold exactly b0 and b1,
+        and a resume equals an uninterrupted run."""
+        import pandas as pd
+
+        src = tg.gen_spark(spark, N_TURNS)
+        ref_table = run_filter_job(spark, src, str(tmp_path / "ref"), "la", n_buckets=3)
+        ref = _final_state(spark, ref_table)
+
+        orig = SnapshotTable.stage
+
+        def stage(self, df, run_id, **kw):
+            if run_id == "la-b2" and self.table_dir.endswith("labels"):
+                raise OSError("disk full staging la-b2")
+            return orig(self, df, run_id, **kw)
+
+        out = str(tmp_path / "job")
+        monkeypatch.setattr(SnapshotTable, "stage", stage)
+        with pytest.raises(OSError, match="disk full staging la-b2"):
+            run_filter_job(spark, src, out, "la", n_buckets=3)
+        monkeypatch.undo()
+        labels, audit = SnapshotTable(f"{out}/labels"), SnapshotTable(f"{out}/audit")
+        assert labels.latest_snapshot().run_ids == ["la-b0", "la-b1"]
+        assert audit.latest_snapshot().run_ids == ["la-b0", "la-b1"]
+
+        resumed = _final_state(spark, run_filter_job(spark, src, out, "la", n_buckets=3))
+        pd.testing.assert_frame_equal(
+            resumed.assign(reasons=resumed.reasons.map(tuple)),
+            ref.assign(reasons=ref.reasons.map(tuple)),
+        )
+        buckets = [f"la-b{b}" for b in range(3)]
+        assert labels.latest_snapshot().run_ids == buckets
+        assert audit.latest_snapshot().run_ids == buckets
+
+    def test_full_job_commits_in_bucket_order_caching_one_frame(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """Both tables list the bucket runs in bucket order, and at most one
+        bucket's persisted scored frame is alive at any time: the staging
+        thread releases it right after staging, before the next bucket's
+        run_pipeline persists another (releasing after the commits, as the
+        sequential loop did, would overlap two)."""
+        import threading
+
+        from moira_spark import job
+
+        lock = threading.Lock()
+        live, peak = [0], [0]
+
+        def run_pipeline(spark_, df):
+            out = orig_run(spark_, df)
+            with lock:
+                live[0] += 1
+                peak[0] = max(peak[0], live[0])
+            return out
+
+        def release_cache(labels):
+            orig_release(labels)
+            with lock:
+                live[0] -= 1
+
+        orig_run, orig_release = job.run_pipeline, job.release_cache
+        monkeypatch.setattr(job, "run_pipeline", run_pipeline)
+        monkeypatch.setattr(job, "release_cache", release_cache)
+
+        out = str(tmp_path / "job")
+        run_filter_job(spark, tg.gen_spark(spark, N_TURNS), out, "ord", n_buckets=3)
+        assert (peak[0], live[0]) == (1, 0)
+        buckets = [f"ord-b{b}" for b in range(3)]
+        for table in ("labels", "audit"):
+            assert SnapshotTable(f"{out}/{table}").latest_snapshot().run_ids == buckets
+
+    @pytest.mark.parametrize("n_buckets", [0, -1])
+    def test_no_buckets_is_refused_before_any_table_is_touched(
+        self, spark, tmp_path, n_buckets
+    ):
+        import driver
+
+        out = tmp_path / "job"
+        with pytest.raises(ValueError, match="n_buckets must be >= 1"):
+            run_filter_job(spark, tg.gen_spark(spark, 100), str(out), "z", n_buckets=n_buckets)
+        assert not out.exists()
+        with pytest.raises(SystemExit):
+            driver.parse_args(
+                ["--synthetic-turns", "100", "--output", str(out), "--run-id", "z",
+                 "--buckets", str(n_buckets)]
+            )
+
     def test_conversation_atomicity(self, spark, tmp_path):
         """Every conversation is judged whole inside one bucket: the bucketed
         job's verdicts equal the single-pipeline verdicts."""

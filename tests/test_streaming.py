@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from moira_spark.datagen import transcripts as tg
 from moira_spark.oracle import ref_pipeline as orc
@@ -51,6 +52,36 @@ def test_stream_matches_batch(spark, tmp_path):
     q = stream_labels(spark, in_dir, out_dir, ck_dir)
     q.awaitTermination(120)
     assert SnapshotTable(out_dir).read(spark).count() == len(ref)
+
+
+def test_failed_stage_releases_the_scored_frame(spark, tmp_path, monkeypatch):
+    """A batch whose stage fails must not leave run_pipeline's persisted
+    scored frame cached for the life of the app."""
+    from moira_spark.streaming import stream_filter
+
+    in_dir = str(tmp_path / "in")
+    tg.gen_spark(spark, 200).write.parquet(in_dir)
+    scored = []
+
+    def run_pipeline(spark_, df):
+        out = orig_run(spark_, df)
+        scored.append(out._moira_scored)
+        return out
+
+    def stage(self, df, run_id, **kw):
+        assert scored[-1].storageLevel.useMemory  # cached until staged
+        raise OSError(f"disk full staging {run_id}")
+
+    orig_run = stream_filter.run_pipeline
+    monkeypatch.setattr(stream_filter, "run_pipeline", run_pipeline)
+    monkeypatch.setattr(SnapshotTable, "stage", stage)
+    q = stream_labels(spark, in_dir, str(tmp_path / "out"), str(tmp_path / "ck"))
+    with pytest.raises(Exception, match="disk full staging stream-batch-0"):
+        q.awaitTermination(120)
+    assert len(scored) == 1
+    level = scored[0].storageLevel
+    assert not (level.useMemory or level.useDisk)
+    assert SnapshotTable(str(tmp_path / "out")).latest_snapshot() is None
 
 
 def test_watermark_drops_late_rows(spark, tmp_path):
