@@ -54,135 +54,9 @@ from moira_spark.harness import (  # noqa: E402,F401
     transcripts,
 )
 
-# ---------------------------------------------------------------------------
-# Registry presentation order.
-#
-# The driver's external harness evaluates queries() in dict order and (round-2
-# evidence: CORRECTNESS_r02.json holds exactly the first 50 registry entries)
-# truncates the tail.  Import order above is alphabetical-by-module, which in
-# round 2 pushed the HIGHEST-information queries — the flagship transcripts
-# pipeline, the F1>=0.99 acceptance gate, the audit sink, and the whole moira
-# read-operator tier — past the window while 17 relational queries that
-# already carried two rounds of green external rows burned the head.
-#
-# ``_PRIORITY`` leads with the spec-critical queries (BASELINE.json
-# north_rule order: pipeline -> F1 gate -> audit/lineage -> model quality
-# gates -> moira read tier -> resume), then the scale-sensitive corpus
-# queries, then dedup/similarity/streaming/multimodal.  Anything registered
-# but not listed keeps registration order after the listed names (so new
-# queries are never silently dropped — tests/test_registry.py pins the
-# invariants).
-#
-# ROTATION POLICY (round 4, after the round-3 lesson where six brand-new
-# queries landed past the cut unverified): every query FIRST REGISTERED in
-# the current or previous round MUST sit inside the first 50; the seats are
-# freed by rotating out queries that are externally proven (>= 2 green
-# driver rounds, listed in EXTERNALLY_PROVEN below) or that a stronger
-# sibling covers (dedup_simhash <- dedup_minhash_lsh; embedding_ann_lsh/ivf
-# <- embedding_ann_recall, whose hard floor runs both).  The media pair
-# rotates each round (image/audio <-> resize/frames) so no multimodal mode
-# goes two rounds without an external row.  tests/test_registry.py enforces
-# the invariant mechanically: an oracle-backed or hard-floor query may sit
-# past index 49 only if it is in EXTERNALLY_PROVEN or covered-by-sibling.
-# ---------------------------------------------------------------------------
-# Queries with >= 2 green external driver rounds (hash_match: true in at
-# least two of CORRECTNESS_r01..r04) — eligible for tail rotation.
-EXTERNALLY_PROVEN: frozenset[str] = frozenset(
-    {
-        # relational tier: green r1 + r2
-        "q1_pricing_summary", "q3_top_orders", "q5_region_revenue",
-        "orders_by_month", "top_customers_having", "suppliers_with_lineitems",
-        "customers_without_big_orders", "heavy_buyers_minus_heavy_errorers",
-        "lineitem_cube", "events_rollup", "event_type_stats",
-        "events_json_extract", "first_event_per_user", "sessionize_events",
-        "top3_events_per_user", "topk_events_global",
-        "value_percentiles_by_type",
-        # text/dedup/similarity/streaming: green r2 + r3
-        "read_revcomp", "read_collapse", "doc_length_rule", "doc_symbol_ratio",
-        "doc_token_stats", "doc_stopword_ratio", "doc_bpe_token_count",
-        "doc_fingerprint", "doc_gopher_stats", "doc_scrub_emails",
-        "doc_scrub_pii", "doc_lang_allowlist", "doc_c4_line_filter",
-        "dedup_exact", "dedup_jaccard_3gram", "dedup_embedding_cosine",
-        "dedup_cluster_representatives", "embedding_label_centroids",
-        # similarity tier: green r1 + r2 + r3 + r4 (rotated out round 5,
-        # third session, to seat the cohort/proximity/DSIR first-timers)
-        "embedding_cosine_topk", "embedding_knn_label",
-        "streaming_windowed_counts", "streaming_dedupe_events",
-        # corpus assembly: green r3 + r4
-        "source_quality_filter", "training_mix_sample", "corpus_to_shards",
-        # r4+r5 first-timers that reached 2 green external rounds and rotated
-        # out in round 6 to drain the staged queue (CORRECTNESS_r04 + r05
-        # both hash-green for every name here)
-        "events_asof_join", "shard_packing", "dedup_jaccard_capped",
-        "dedup_incremental", "doc_span_dedup", "streaming_session_windows",
-        "corpus_near_dedup", "dedup_cluster_bigstar",
-    }
-)
-
-# Rows-only queries whose behavior a stronger in-window sibling exercises
-# (documented eviction justification for the invariant test).
-COVERED_BY_SIBLING: dict[str, str] = {
-    "dedup_simhash": "dedup_minhash_lsh",
-    "embedding_ann_lsh": "embedding_ann_recall",
-    "embedding_ann_ivf": "embedding_ann_recall",
-    # the LSH-banded embedding bucket join runs inside ann_recall's
-    # floor-gated path every round; the dedup variant adds only the
-    # threshold prune on top (rotated out round 5, third session)
-    "dedup_embedding_lsh": "embedding_ann_recall",
-    "streaming_filter_labels": "streaming_conv_verdicts",
-    # media pair rotates each round: round 6 has resize/frames in-window,
-    # image/audio covered (round 5 was the reverse)
-    "media_image_features": "media_resize_features",
-    "media_audio_features": "media_frame_samples",
-}
-
-# Short explicit promotion queue for queries registered after the round's
-# window filled with unproven first-timers.  Staged queries are fully checked
-# locally every session (scripts/check_correctness.py runs ALL oracle-backed
-# queries at sf0.001 + sf0.01 with the driver's exact compare) and MUST be
-# promoted into the window the following round.  tests/test_registry.py caps
-# this queue at 7 so it stays a queue, not a loophole.
-#
-# Round 6 honored the round-5 contract: all 7 staged queries
-# (table_merge_upsert, doc_tfidf_topterms, corpus_bigram_pmi,
-# streaming_interval_join, bucketed_join_colocated, events_bloom_prefilter,
-# corpus_curriculum_buckets) drained into the window, seated by rotating out
-# the 2x-green r4/r5 first-timers now listed in EXTERNALLY_PROVEN.
-#
-# Staged late in round 6, after the window filled with the drain + the two
-# new in-window queries (table_changes_cdc, table_lifecycle_compose); all
-# SQL-checked at sf0.001 + sf0.01 by the local driver mirror every session.
-# Round 7 frees ample seats, so the queue drains to zero in round 7 as
-# contracted: >= 13 in-window r5 first-timers reach their 2nd green round
-# in r6 and become rotation-eligible (events_funnel/retention/proximity,
-# doc_repetition_stats, doc_unigram_entropy, events_anomaly,
-# dedup_containment, doc_decontaminate, source_percentile_gate,
-# corpus_quality_budget, doc_dsir_weight, dedup_semantic[_kmeans],
-# training_mix_temperature) — 13 seats for exactly 13 staged queries.
-# Round 6 is therefore the LAST session that may stage anything; the cap
-# in tests/test_registry.py comes back down after the r7 drain.
-STAGED_NEXT_WINDOW: frozenset[str] = frozenset(
-    {
-        "doc_heavy_hitters",
-        "table_cdc_matview",
-        "lm_bigram_kn",
-        "doc_bm25_search",
-        "doc_chunk_windows",
-        "corpus_weighted_sample",
-        "dedup_editdist_refine",
-        # third-session additions, same local-mirror discipline
-        "doc_substring_dedup",
-        "graph_pagerank",
-        "corpus_split_leakage",
-        # fourth-session additions: corpus-governance tier
-        "source_drift_ks",
-        "doc_boilerplate_prefix",
-        "source_overlap_matrix",
-    }
-)
-
-_PRIORITY: tuple[str, ...] = (
-    # flagship + spec acceptance gates (north_rule core)
+# queries() order: the transcript quality filter's own queries first, then
+# every other query in registration order.
+_FLAGSHIP: tuple[str, ...] = (
     "transcripts_pipeline",
     "pipeline_f1_vs_reference",
     "transcripts_audit",
@@ -192,100 +66,17 @@ _PRIORITY: tuple[str, ...] = (
     "doc_langid_separable",
     "doc_perplexity",
     "doc_perplexity_separation",
-    # moira read-operator tier (SURVEY.md §2.1; read_revcomp/read_collapse
-    # rotated out in round 5 second session — both 3x externally green
-    # r2+r3+r4 — to seat the session's new operators)
     "read_pair_assembly",
     "read_expected_errors",
     "read_expected_errors_bootstrap",
     "doc_winnow_fingerprint",
     "job_resume_identity",
     "table_maintenance_lifecycle",
-    # round-6 staged-queue drain: all 7 queries registered late in round 5
-    # take their first external row this round, seated by rotating out the
-    # 2x-green r4/r5 first-timers (events_asof_join, shard_packing,
-    # dedup_jaccard_capped, dedup_incremental, doc_span_dedup,
-    # streaming_session_windows — all hash-green r4+r5, now in
-    # EXTERNALLY_PROVEN) plus the 3x-green veteran first_event_per_user
-    "table_merge_upsert",
-    "doc_tfidf_topterms",
-    "corpus_bigram_pmi",
-    "streaming_interval_join",
-    "bucketed_join_colocated",
-    "events_bloom_prefilter",
-    "corpus_curriculum_buckets",
-    # ordered conversion funnel, day-granular cohort retention, and the
-    # bucketed temporal proximity join (all new round 5, second green due)
-    "events_funnel",
-    "events_retention_cohorts",
-    "events_proximity_join",
-    # text / quality heuristics (SQL-checked) + learned classifier gate
-    # (doc_bpe_token_count rotated out: 3x green r2+r3+r4; the trained-BPE
-    # floor query stays for its second green round)
-    # (doc_gopher_stats and doc_scrub_pii rotated out late round 5: both
-    # 3x green r2-r4, each with an in-window sibling — repetition_stats
-    # extends the Gopher tier, transcripts_pipeline runs the FULL scrubber)
-    # (doc_c4_line_filter rotated out with them: 3x green r2-r4, seat taken
-    # by the k-means SemDeDup composition)
-    "doc_bpe_trained",
-    "doc_repetition_stats",
-    "doc_unigram_entropy",
-    "doc_quality_model",
-    # sketch tier (HLL++ / GK quantiles, self-verifying floors) + the
-    # integer-exact hourly anomaly test (new round 5, third session)
-    "events_approx_distinct",
-    "events_approx_quantiles",
-    "events_anomaly",
-    # dedup tier (incl. round-3/4 capstones: closure, capped, incremental;
-    # round 5 adds containment doc-in-doc dedup, eval-set decontamination,
-    # and per-source percentile gating — dedup_exact / dedup_jaccard_3gram
-    # (both 4x externally green) and dedup_embedding_cosine (3x green;
-    # its LSH twin stays in-window) rotated out)
-    "dedup_containment",
-    "doc_decontaminate",
-    "source_percentile_gate",
-    "corpus_quality_budget",
-    "doc_dsir_weight",
-    "dedup_semantic",
-    "dedup_semantic_kmeans",
-    "training_mix_temperature",
-    # (dedup_jaccard_capped rotated out round 6: 2x green r4+r5)
-    "dedup_minhash_lsh",
-    # (dedup_embedding_lsh rotated out in the third session under sibling
-    # cover: embedding_ann_recall — in-window, floor-gated — exercises the
-    # same LSH-banded embedding bucket join every round)
-    # (dedup_cluster_representatives rotated out late round 5: 3x green
-    # r2-r4, and the in-window bigstar twin is checked against the SAME
-    # DuckDB recursive-CTE closure oracle)
-    # (dedup_incremental, doc_span_dedup, dedup_cluster_bigstar and
-    # corpus_near_dedup rotated out round 6: all 2x green r4+r5.  The last
-    # two seats go to the new round-6 queries: the batch->MERGE->changelog
-    # CDC round trip, SQL-checked against a DuckDB-computed diff, and the
-    # full lifecycle composition chain, hard-fail rows-only)
-    "table_changes_cdc",
-    "table_lifecycle_compose",
-    "dedup_incremental_minhash",
-    # similarity tier (ann_recall's hard floor runs both LSH and IVF paths)
-    # (embedding_label_centroids rotated out late round 5: 3x green r2-r4,
-    # and the centroid machinery now has TWO in-window exercisers —
-    # dedup_semantic's fixed-point means and embedding_kmeans;
-    # embedding_cosine_topk + embedding_knn_label rotated out in the third
-    # session: 4x green r1-r4, the longest-proven rows in the registry)
-    "embedding_ann_recall",
-    "embedding_kmeans",
-    # streaming tier (session_windows rotated out round 6: 2x green r4+r5;
-    # the SQL-checked streaming row is now streaming_interval_join)
-    "streaming_conv_verdicts",
-    "streaming_incremental_dedup",
-    # multimodal tier (decoders env-gated; pair rotates each round —
-    # round 6: resize/frames in, image/audio covered-by-sibling)
-    "media_resize_features",
-    "media_frame_samples",
 )
 
 
 def _ordered() -> dict[str, tuple[SparkQuery, str | None]]:
-    head = {n: REGISTRY[n] for n in _PRIORITY if n in REGISTRY}
+    head = {n: REGISTRY[n] for n in _FLAGSHIP if n in REGISTRY}
     tail = {n: v for n, v in REGISTRY.items() if n not in head}
     return {**head, **tail}
 

@@ -731,8 +731,9 @@ def dedup_minhash_lsh(
 
     # The signature frame feeds three plan branches (both sides of the
     # band self-join + exact verify); persist at the branch point or every
-    # branch re-runs the UDF and re-scans the corpus (verified in PLANS.md —
-    # unpersisted, the pre-execution plan shows 4 ArrowEvalPython nodes).
+    # branch re-runs the UDF and re-scans the corpus (scripts/dump_plans.py
+    # shows it: unpersisted, the pre-execution plan has 4 ArrowEvalPython
+    # nodes).
     # At production scale the equivalent is write-once to a staging table.
     signed = hashed.select(
         "doc_id", "s", minhash(F.col("h")).alias("mh")
@@ -1088,6 +1089,17 @@ def semantic_dedup_flags(
     return intra_cluster_prune(clustered, threshold)
 
 
+def spark_round6(x: float) -> float:
+    """Spark's ROUND(x, 6) of a double, in Python: Spark rounds the
+    decimal string Double.toString(x) HALF_UP, and repr(x) is the same
+    decimal (pinned against the JVM in tests/test_properties.py)."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    return float(
+        Decimal(repr(x)).quantize(Decimal("0.000001"), rounding=ROUND_HALF_UP)
+    )
+
+
 def intra_cluster_prune(
     clustered: DataFrame,
     threshold: float = _EMB_DUP_THRESHOLD,
@@ -1153,9 +1165,9 @@ def intra_cluster_prune(
     # — bit-identical IEEE op sequence to aggregate(zip_with(...))), and
     # cos = acc / outer(na, nb) mirrors dot / (na * nb).  The >= threshold
     # decision replicates Spark's ROUND(cos, 6) exactly: candidates within
-    # a safety margin of the threshold are re-rounded with
-    # Decimal(repr(x)) HALF_UP — the identical BigDecimal.valueOf
-    # semantics — so the flag cannot drift even on a boundary value
+    # a safety margin of the threshold are re-rounded by spark_round6
+    # (Decimal(repr(x)) HALF_UP — the identical BigDecimal.valueOf
+    # semantics) so the flag cannot drift even on a boundary value
     # (oracle-verified; for unit vectors the band is empirically empty).
     # S block-pair split: groups = clusters x S^2, fan-out copies = 2S-1
     # per row.  A/B at sf0.1 / 10x (best-of-3/2): S=8 2.00/5.26,
@@ -1223,19 +1235,11 @@ def intra_cluster_prune(
         mask = (ids_a[:, None] < ids_b[None, :]) & (cos >= thr - 1e-4)
         if not mask.any():
             return pd.DataFrame({"vec_id": pd.Series([], dtype="int64")})
-        from decimal import ROUND_HALF_UP, Decimal
-
-        q = Decimal("0.000001")
         ai, bi = np.nonzero(mask)
         keep = [
             int(ids_b[j])
             for i, j in zip(ai, bi)
-            if float(
-                Decimal(repr(float(cos[i, j]))).quantize(
-                    q, rounding=ROUND_HALF_UP
-                )
-            )
-            >= thr
+            if spark_round6(float(cos[i, j])) >= thr
         ]
         return pd.DataFrame({"vec_id": pd.Series(keep, dtype="int64")})
 

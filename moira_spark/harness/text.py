@@ -954,11 +954,11 @@ def percentile_gate(
     Scale shape: ONE shuffle keyed by the stratum, then a linear
     per-partition rank — but a per-stratum window sort is the known
     hot-partition risk when stratum cardinality is small and strata are
-    petabyte-skewed (the exact trap PLANS.md documents for global-order
-    windows).  This is the oracle-exact variant; the web-scale pairing is
-    the same two-phase cutoff the capped-Jaccard tier uses for its
-    approximation switch: aggregate per-stratum score histograms (map-side
-    combine), derive the q-th cutoff from the histogram, broadcast the
+    petabyte-skewed (the exact trap scripts/dump_plans.py shows for
+    global-order windows).  This is the oracle-exact variant; the
+    web-scale pairing is the same two-phase cutoff the capped-Jaccard tier
+    uses for its approximation switch: aggregate per-stratum score
+    histograms (map-side combine), derive the q-th cutoff from the histogram, broadcast the
     tiny (stratum, cutoff) table back over the doc stream — same result up
     to cutoff-tie handling, zero sort."""
     from pyspark.sql import Window
@@ -2613,7 +2613,8 @@ _BOILER_MIN = 3
     SELECT doc_id, prefix,
            CAST(COUNT(*) OVER (PARTITION BY prefix) AS BIGINT)
              AS prefix_count,
-           COUNT(*) OVER (PARTITION BY prefix) >= {_BOILER_MIN}
+           prefix IS NOT NULL
+             AND COUNT(*) OVER (PARTITION BY prefix) >= {_BOILER_MIN}
              AS is_boilerplate
     FROM pre
     """,
@@ -2665,7 +2666,8 @@ def boilerplate_prefixes(
 ) -> DataFrame:
     """Flag docs whose normalized first-k-word prefix repeats >= min_count
     times — core of doc_boilerplate_prefix; one window COUNT over the
-    prefix key, no second shuffle."""
+    prefix key, no second shuffle.  A NULL-text doc has a NULL prefix and
+    is never flagged: NULL texts share no template."""
     # NULL-text guard (ADVICE r6): concat_ws returns '' for a NULL word
     # array while the DuckDB oracle's ARRAY_TO_STRING yields NULL — on a
     # corpus with NULL texts the engines would diverge on exactly those
@@ -2683,7 +2685,9 @@ def boilerplate_prefixes(
         "doc_id",
         "prefix",
         cnt.cast("bigint").alias("prefix_count"),
-        (cnt >= min_count).alias("is_boilerplate"),
+        (F.col("prefix").isNotNull() & (cnt >= min_count)).alias(
+            "is_boilerplate"
+        ),
     )
 
 
@@ -2783,14 +2787,19 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # source layout and would abort the whole bench on a reshaped
     # fixture; this form still proves the spread count is exact and (when
     # the spread reaches _OVL_CAP, as on every shipped fixture) that the
-    # cap has a real universal gram to fire on.
-    expected = corpus.where(F.col("doc_id") % 6 == 0).agg(
+    # cap has a real universal gram to fire on.  A NULL text stays NULL
+    # after the plant (concat propagates NULL), so only non-NULL planted
+    # docs can carry the gram.
+    expected = corpus.where(
+        (F.col("doc_id") % 6 == 0) & F.col("text").isNotNull()
+    ).agg(
         F.count_distinct("source").alias("n")
     ).collect()[0]["n"]
     if (planted or 0) != expected:
         raise AssertionError(
             "overlap-cap gate failed: planted universal gram spread "
-            f"{planted} != {expected} sources holding a doc_id%6==0 doc"
+            f"{planted} != {expected} sources holding a non-NULL "
+            "doc_id%6==0 doc"
         )
     return overlap_matrix_from_spread(spread, _OVL_CAP)
 

@@ -937,6 +937,18 @@ class TestBoilerplatePrefixes:
         got = boilerplate_prefixes(d, min_count=4).collect()
         assert not any(r["is_boilerplate"] for r in got)
 
+    def test_null_texts_are_never_boilerplate(self, spark):
+        d = _docs_txt(
+            spark,
+            [(i, "dear sir please reply %d" % i) for i in range(3)]
+            + [(i, None) for i in range(10, 14)],
+        )
+        got = {r["doc_id"]: r for r in boilerplate_prefixes(d).collect()}
+        assert all(got[i]["is_boilerplate"] for i in range(3))
+        for i in range(10, 14):
+            assert got[i]["prefix"] is None and got[i]["prefix_count"] == 4
+            assert not got[i]["is_boilerplate"]
+
 
 def _srcdocs(spark, rows):
     return spark.createDataFrame(rows, "source string, text string")
@@ -983,6 +995,70 @@ class TestOverlapMatrix:
         # cap high enough keeps it -> all three pairs appear
         rows = overlap_matrix(d, w=5, cap=99).collect()
         assert len(rows) == 3
+
+
+def _documents_dir(tmp_path, rows):
+    """An sf dir holding only documents.parquet, from (doc_id, source,
+    text) rows."""
+    import pandas as pd
+
+    pd.DataFrame(rows, columns=["doc_id", "source", "text"]).to_parquet(
+        tmp_path / "documents.parquet", index=False
+    )
+    return str(tmp_path)
+
+
+def _matches_oracle(spark, sf_dir, name):
+    import duckdb
+
+    import moira_spark.harness as harness
+    from scripts.check_correctness import value_hash
+
+    sdf = harness.queries()[name](spark, sf_dir).toPandas()
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{sf_dir}/documents.parquet')"
+    )
+    ddf = con.execute(harness.oracle_sql()[name]).df()
+    assert len(sdf) == len(ddf), (len(sdf), len(ddf))
+    assert sorted(sdf.columns) == sorted(ddf.columns)
+    assert value_hash(sdf) == value_hash(ddf)
+    return sdf
+
+
+class TestNullTextOracleParity:
+    """The fixtures carry no NULL text; these pin both engines on a tiny
+    documents table that does."""
+
+    def test_boilerplate_prefix(self, spark, tmp_path):
+        words = "alpha bravo charlie delta echo foxtrot golf hotel".split()
+        rows = [
+            (i, "s", None if i % 7 == 3 else " ".join(words[i % 8 :] + words))
+            for i in range(40)
+        ]
+        out = _matches_oracle(
+            spark, _documents_dir(tmp_path, rows), "doc_boilerplate_prefix"
+        )
+        nulls = out[out["prefix"].isna()]
+        assert len(nulls) == 6 and not nulls["is_boilerplate"].any()
+
+    def test_overlap_gate_skips_null_planted_doc(self, spark, tmp_path):
+        # src C's only doc_id % 6 == 0 doc has NULL text, so it cannot
+        # carry the planted gram: the gate must expect 2 sources, not 3.
+        rows = [
+            (0, "A", "alpha bravo charlie delta echo foxtrot"),
+            (1, "C", "mike november oscar papa quebec romeo"),
+            (2, "A", "mike november oscar papa quebec sierra"),
+            (3, "B", "tango uniform victor whiskey xray yankee"),
+            (6, "B", "golf hotel india juliet kilo lima"),
+            (12, "C", None),
+        ]
+        out = _matches_oracle(
+            spark, _documents_dir(tmp_path, rows), "source_overlap_matrix"
+        )
+        got = {(r.src_a, r.src_b): r.shared for r in out.itertuples()}
+        assert got == {("A", "B"): 2, ("A", "C"): 1}
 
 
 class TestGovernanceEdgeCases:

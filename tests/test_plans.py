@@ -1,8 +1,8 @@
 """Physical-plan regression tests (round-3, verdict item 5).
 
-PLANS.md documents the plan conventions (pushed filters, pruned ReadSchema,
-broadcast joins for small sides, one Arrow hop per UDF stage, no
-single-partition exchange); until now a plan regression only surfaced as a
+scripts/dump_plans.py dumps the plans behind the conventions (pushed
+filters, pruned ReadSchema, broadcast joins for small sides, one Arrow hop
+per UDF stage, no single-partition exchange); until now a plan regression only surfaced as a
 bench number.  These tests make the properties fail fast in pytest.
 
 Counting notes:

@@ -254,3 +254,51 @@ class TestAnomalyAlgebraProperties:
             else:
                 rational_form = (c - mean) ** 2 > z2 * var
             assert integer_form == rational_form, (c, counts, z2)
+
+
+def _drawn(strategy, n):
+    """The values a derandomized hypothesis run of ``n`` examples draws
+    from ``strategy`` — harvested so one Spark frame can check them all."""
+    out = []
+
+    @settings(derandomize=True, max_examples=n, deadline=None, database=None)
+    @given(strategy)
+    def draw(x):
+        out.append(x)
+
+    draw()
+    return out
+
+
+class TestHalfUpParity:
+    def test_spark_round6_matches_jvm_round(self, spark):
+        # intra_cluster_prune's pandas UDF flags cos >= threshold on
+        # spark_round6(cos), standing in for Spark's ROUND(cos, 6).  The
+        # JVM rounds Double.toString(x) HALF_UP; before JDK 19 that string
+        # is not always Python's shortest repr, so pin the two on doubles
+        # in [-1, 1] and on k/1e6 + 5e-7 ties (and their neighbouring
+        # doubles), where one differing digit would flip the rounding.
+        import math
+
+        import pyspark.sql.functions as F
+
+        from moira_spark.harness.dedup import spark_round6
+
+        ties = [k / 1e6 + 5e-7 for k in range(-1000, 1000)] + _drawn(
+            st.integers(-(10**6), 10**6 - 1).map(lambda k: k / 1e6 + 5e-7),
+            1000,
+        )
+        xs = _drawn(st.floats(-1.0, 1.0), 1000) + [
+            y
+            for t in ties
+            for y in (t, math.nextafter(t, -2.0), math.nextafter(t, 2.0))
+        ]
+        frame = spark.createDataFrame(list(enumerate(xs)), "i long, x double")
+        got = frame.select("i", F.round("x", 6).alias("r")).collect()
+        assert len(got) == len(xs)
+        bad = {
+            xs[r["i"]]: r["r"]
+            for r in got
+            if spark_round6(xs[r["i"]]) != r["r"]
+        }
+        assert not bad, f"Spark ROUND(x, 6) differs from spark_round6: {bad}"
