@@ -2443,7 +2443,7 @@ _KS_C_ALPHA = 1.628
       SELECT source,
              CAST(LEN(LIST_FILTER(STRING_SPLIT(text, ' '), x -> x != ''))
                   AS BIGINT) AS v
-      FROM corpus
+      FROM corpus WHERE text IS NOT NULL
     ),
     counts AS (
       SELECT source, v, CAST(COUNT(*) AS BIGINT) AS c
@@ -2523,7 +2523,9 @@ def source_drift_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat(F.col("text"), F.lit(" "), F.col("text")),
         ).otherwise(F.col("text")),
     )
-    vals = corpus.select(
+    # a NULL text has no length: it is no sample of its source's
+    # distribution, and counted in n_s it would cap the source's ECDF below 1
+    vals = corpus.filter(F.col("text").isNotNull()).select(
         "source", F.size(_words_col()).cast("bigint").alias("v")
     )
     out = ks_drift(vals).localCheckpoint(

@@ -1,28 +1,24 @@
 """Resumable quality-filter job: chunked, snapshot-committed, audited.
 
-The production entry (driver script for ``spark-submit --py-files``): the
-input conversation space is split into ``n_buckets`` hash buckets; each
-bucket is filtered, staged, audited, and committed as one snapshot.  The
-bucket loop is a two-stage pipeline: a background thread stages bucket b+1
-while the caller's thread audits and commits bucket b, in bucket order.  A
-crash — executor or driver — therefore loses at most two buckets of work,
-the one committing and the one staging, and both live only in staging
-directories invisible to readers (sources/tableio.py); re-running the same
-run_id skips every committed bucket and reproduces the identical final table
-(pytest-pinned in tests/test_resume.py).  "Committed" has one rule for the
-labels and audit tables alike, ``SnapshotTable.is_committed(bucket_run)``:
-it also counts runs a compaction or merge has since folded away.
+The production entry (driver script for ``spark-submit --py-files``) splits
+the input into ``n_buckets`` conv_id hash buckets, so each conversation is
+judged whole inside one bucket (its verdict depends on all its turns).  Each
+bucket is filtered, staged, audited and committed as one snapshot.  A
+background thread stages bucket b+1 while the caller's thread audits and
+commits bucket b, in bucket order, so a crash — executor or driver — loses
+at most those two buckets, both only in staging directories invisible to
+readers (sources/tableio.py).  Re-running the same run_id skips every
+committed bucket and reproduces the identical final table (pinned in
+tests/test_resume.py).  "Committed" has one rule for the labels and audit
+tables alike, ``SnapshotTable.is_committed(bucket_run)``: it also counts
+runs a compaction or merge has since folded away.
 
-Bucketing by conv_id hash keeps conversation atomicity (a conversation is
-judged whole inside exactly one bucket — required because the conv-level
-verdict depends on all its turns).
-
-Each bucket's labels are written range-partitioned and sorted on
-``pipeline.LABEL_SORT`` = (conv_id, turn_idx), Iceberg's sorted write
-distribution.  Hash buckets span the whole conv_id range, but within a run
-every file then covers a near-disjoint conv_id slice, and the per-file zone
-maps collected at commit let ``read(filters=[("conv_id", "=", c)])`` plan
-one file per run instead of every file.
+The per-bucket commit path, ``stage_labels`` then ``commit_with_audit``, is
+shared: each streaming micro-batch runs it too (streaming/stream_filter.py).
+Labels runs are staged sorted on ``pipeline.LABEL_SORT`` = (conv_id,
+turn_idx), Iceberg's sorted write distribution: every file of a run then
+covers a near-disjoint conv_id slice, so the per-file zone maps let
+``read(filters=[("conv_id", "=", c)])`` plan one file per run, not every file.
 """
 
 from __future__ import annotations
@@ -33,6 +29,7 @@ from concurrent.futures import ThreadPoolExecutor
 import pyspark.sql.functions as F
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from moira_spark import config
 from moira_spark.pipeline import LABEL_SORT, release_cache, run_pipeline
@@ -89,6 +86,39 @@ def audit_rows(labels: DataFrame, run_id: str, bucket: int, wall_ms: int) -> Dat
     )
 
 
+def stage_labels(table: SnapshotTable, labels: DataFrame, run: str) -> StructType:
+    """Stage ``labels`` as ``run`` sorted on ``LABEL_SORT``, then release the
+    frame ``run_pipeline`` cached for it, failed or not; -> its schema."""
+    try:
+        table.stage(labels, run, cluster_by=list(LABEL_SORT))
+    finally:
+        release_cache(labels)
+    return labels.schema
+
+
+def commit_with_audit(
+    spark: SparkSession, labels_table: SnapshotTable, audit_table: SnapshotTable,
+    run: str, schema: StructType, run_id: str, bucket: int, wall_ms: int,
+) -> None:
+    """Audit the staged labels run ``run`` under its own name, then commit it."""
+    # commit order: audit first, labels last.  A crash between the two leaves
+    # a committed audit run whose labels are not; the replay re-stages the
+    # labels (an unreferenced orphan) but MUST NOT re-stage the audit dir: a
+    # committed snapshot references it, and overwriting it would break
+    # snapshot immutability.  The committed copy's totals equal any re-run's.
+    # Its per-partition split follows the shuffle's partition count and AQE
+    # coalescing, so it is reproducible only under the same settings.
+    if not audit_table.is_committed(run):
+        # the known schema spares a schema-inference job; conv_id hash
+        # partitions count a conversation split between two files of the
+        # sorted run once in the summed convs_dropped, as any bucketing does
+        staged = spark.read.schema(schema).parquet(labels_table.staged_dir(run))
+        rows = audit_rows(staged.repartition("conv_id"), run_id, bucket, wall_ms)
+        audit_table.stage(rows, run)
+        audit_table.commit(spark, run)
+    labels_table.commit(spark, run)
+
+
 def run_filter_job(
     spark: SparkSession,
     source: DataFrame,
@@ -99,10 +129,10 @@ def run_filter_job(
 ) -> SnapshotTable:
     """Filter ``source`` into ``output_dir`` (labels + audit tables).
 
-    One worker thread stages the next bucket's labels while this thread
-    audits and commits the current one.  Commits stay in bucket order, so
-    the committed buckets always form a prefix of the buckets to do; a
-    staging error is raised once every earlier bucket has committed.
+    One worker thread stages the next bucket while this thread audits and
+    commits the current one, in bucket order: the committed buckets always
+    form a prefix of the buckets to do, and a staging error is raised once
+    every earlier bucket has committed.
 
     ``fail_after_buckets`` is a test hook: raise after committing that many
     buckets, simulating a driver crash mid-job (the bucket staging in the
@@ -122,14 +152,8 @@ def run_filter_job(
         t0 = time.time()
         slice_df = source.filter(_bucket_of(F.col("conv_id"), n_buckets) == bucket)
         labels = run_pipeline(spark, slice_df)
-        try:
-            labels_table.stage(labels, f"{run_id}-b{bucket}", cluster_by=list(LABEL_SORT))
-        finally:
-            # The audit and both commits read the staged files, not the
-            # cache: releasing here keeps one bucket's persisted scored
-            # frame alive at a time, even with the next bucket staging.
-            release_cache(labels)
-        return labels.schema, int((time.time() - t0) * 1000)
+        schema = stage_labels(labels_table, labels, f"{run_id}-b{bucket}")
+        return schema, int((time.time() - t0) * 1000)
 
     # Exiting the pool waits for an in-flight staging run, so a failed job
     # never leaves a thread writing a staging dir its resume will overwrite
@@ -145,29 +169,8 @@ def run_filter_job(
         for i, bucket in enumerate(todo):
             schema, wall_ms = pending.result()
             pending = submit(i + 1) if i + 1 < len(todo) else None
-            bucket_run = f"{run_id}-b{bucket}"
-            # the known schema spares the schema-inference Spark job per bucket
-            staged = spark.read.schema(schema).parquet(
-                labels_table.staged_dir(bucket_run)
-            )
-            # commit order: audit first, labels last — a crash between the
-            # two leaves an audit run whose labels are uncommitted; the next
-            # resume re-runs the bucket (labels staging dir is an
-            # unreferenced orphan, safe to overwrite) but MUST NOT re-stage
-            # the audit dir: it is already referenced by a committed audit
-            # snapshot, and overwriting it would violate snapshot
-            # immutability (a crash mid-overwrite would corrupt committed
-            # data).  Keeping the committed copy is exact for the bucket's
-            # totals, which any re-run reproduces.  Its per-partition split
-            # is not reproducible in general: partition_id is the re-read's
-            # spark_partition_id, a grain that follows the sorted write's
-            # sampled range bounds and file-split packing
-            # (defaultParallelism, openCostInBytes), so it is stable only
-            # for a given cluster size.
-            if not audit_table.is_committed(bucket_run):
-                audit_table.stage(audit_rows(staged, run_id, bucket, wall_ms), bucket_run)
-                audit_table.commit(spark, bucket_run)
-            labels_table.commit(spark, bucket_run)
+            commit_with_audit(spark, labels_table, audit_table, f"{run_id}-b{bucket}",
+                              schema, run_id, bucket, wall_ms)
             if fail_after_buckets is not None and i + 1 >= fail_after_buckets:
                 raise RuntimeError(f"injected crash after {i + 1} buckets")
     return labels_table

@@ -10,6 +10,7 @@ hash), and prints a per-query PASS/FAIL table.  Use while iterating:
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import time
 import traceback
@@ -17,6 +18,8 @@ import traceback
 import duckdb
 import pandas as pd
 
+# the checkout this script lives in: a copy checks its own code
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 TABLES = (
     "region nation customer supplier part orders lineitem events documents "
     "embeddings"
@@ -53,7 +56,7 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     import __spark_entry__ as entrymod
     from moira_spark.session import build_session
 

@@ -1060,6 +1060,21 @@ class TestNullTextOracleParity:
         got = {(r.src_a, r.src_b): r.shared for r in out.itertuples()}
         assert got == {("A", "B"): 2, ("A", "C"): 1}
 
+    def test_ks_drift(self, spark, tmp_path):
+        # a NULL text has no length, so it is no sample of its source's
+        # distribution: counted, it would cap src1's ECDF at 1/2, a drift
+        # alarm on lengths identical to src0's
+        rows = [
+            (100 * s + i, src, " ".join(["w"] * (1 + i % 10)) if i < 30 else None)
+            for s, src in enumerate(("src0", "src1", "src7"))
+            for i in range(60 if src == "src1" else 32)
+        ]
+        out = _matches_oracle(
+            spark, _documents_dir(tmp_path, rows), "source_drift_ks"
+        )
+        got = {r.source: (r.n_docs, r.drift) for r in out.itertuples()}
+        assert got == {"src0": (30, False), "src1": (30, False), "src7": (30, True)}
+
 
 class TestGovernanceEdgeCases:
     def test_ks_singleton_group_never_drifts(self, spark):

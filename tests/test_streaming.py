@@ -2,6 +2,10 @@
 
 from __future__ import annotations
 
+import os
+import time
+from collections import Counter
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -11,6 +15,30 @@ from moira_spark.sources.tableio import SnapshotTable
 from moira_spark.streaming.stream_filter import stream_labels
 
 N_TURNS = 2000
+
+
+def _write_arrivals(src, in_dir: str, n: int) -> None:
+    """``n`` conversation-atomic parquet files, one micro-batch each under
+    ``max_files_per_trigger=1``."""
+    for i in range(n):
+        part = src.filter(F.pmod(F.xxhash64("conv_id"), F.lit(n)) == i)
+        part.repartition(1).write.mode("append").parquet(in_dir)
+        time.sleep(0.2)  # distinct mtimes pin the file -> batch order
+
+
+def _drain(spark, in_dir: str, out_dir: str, ck_dir: str) -> None:
+    q = stream_labels(spark, in_dir, out_dir, ck_dir, max_files_per_trigger=1)
+    q.awaitTermination(180)
+
+
+def _audit_totals(spark, audit: SnapshotTable) -> dict:
+    rows = audit.read(spark).collect()
+    totals = {
+        k: sum(r[k] for r in rows)
+        for k in ("input_turns", "kept_turns", "dropped_turns", "convs_dropped")
+    }
+    totals["rule_hits"] = sum((Counter(r.rule_hits) for r in rows), Counter())
+    return totals
 
 
 def test_stream_matches_batch(spark, tmp_path):
@@ -439,3 +467,82 @@ def test_incremental_consumer_survives_mid_stream_merge(spark, tmp_path):
         for r in table.read(spark).collect()
     }
     assert state == truth
+
+
+def test_stream_audit_totals_equal_the_jobs(spark, tmp_path):
+    """Each micro-batch is audited like a job bucket: over the same rows the
+    stream's audit totals equal the job's, and the audit table holds one run
+    per committed labels run."""
+    from moira_spark.job import run_filter_job
+
+    in_dir, out_dir = str(tmp_path / "in"), str(tmp_path / "out")
+    src = tg.gen_spark(spark, N_TURNS)
+    _write_arrivals(src, in_dir, 3)
+    _drain(spark, in_dir, out_dir, str(tmp_path / "ck"))
+    job_dir = str(tmp_path / "job")
+    run_filter_job(spark, src, job_dir, "tot", n_buckets=2)
+
+    labels, audit = SnapshotTable(out_dir), SnapshotTable(f"{out_dir}_audit")
+    runs = [f"stream-batch-{b}" for b in range(3)]
+    assert labels.latest_snapshot().run_ids == runs
+    assert audit.latest_snapshot().run_ids == runs
+    got = _audit_totals(spark, audit)
+    assert got == _audit_totals(spark, SnapshotTable(f"{job_dir}/audit"))
+    assert got["input_turns"] == labels.read(spark).count()
+    assert got["dropped_turns"] > 0 and got["rule_hits"]  # not vacuous
+    assert {
+        r.snapshot_bucket: r.run_id for r in audit.read(spark).collect()
+    } == dict(enumerate(runs))
+
+
+def test_crash_between_batch_commits_keeps_the_committed_audit(
+    spark, tmp_path, monkeypatch
+):
+    """Crash AFTER batch 1's audit commit, BEFORE its labels commit: the
+    restarted stream replays batch 1 without re-staging the audit dir a
+    committed snapshot references, and ends equal to an uninterrupted drain
+    (the job's rule, tests/test_resume.py::TestCrashBetweenCommits)."""
+    import pandas as pd
+
+    in_dir = str(tmp_path / "in")
+    _write_arrivals(tg.gen_spark(spark, N_TURNS), in_dir, 3)
+    ref_dir, out_dir, ck_dir = (str(tmp_path / d) for d in ("ref", "out", "ck"))
+    _drain(spark, in_dir, ref_dir, str(tmp_path / "ref_ck"))
+
+    labels, audit = SnapshotTable(out_dir), SnapshotTable(f"{out_dir}_audit")
+    orig = SnapshotTable.commit
+
+    def commit(self, spark_, run_id, *args, **kw):
+        if run_id == "stream-batch-1" and self.table_dir == labels.table_dir:
+            raise RuntimeError("injected crash before labels commit")
+        return orig(self, spark_, run_id, *args, **kw)
+
+    monkeypatch.setattr(SnapshotTable, "commit", commit)
+    with pytest.raises(Exception, match="injected crash before labels commit"):
+        _drain(spark, in_dir, out_dir, ck_dir)
+    monkeypatch.undo()
+    assert audit.is_committed("stream-batch-1")
+    assert not labels.is_committed("stream-batch-1")
+
+    audit_dir = audit.staged_dir("stream-batch-1")
+
+    def mtimes():
+        return {
+            f: os.path.getmtime(os.path.join(audit_dir, f))
+            for f in sorted(os.listdir(audit_dir))
+            if not f.startswith(".")
+        }
+
+    before = mtimes()
+    _drain(spark, in_dir, out_dir, ck_dir)  # restart on the same checkpoint
+    assert mtimes() == before, "committed audit data dir was rewritten"
+    runs = [f"stream-batch-{b}" for b in range(3)]
+    assert audit.latest_snapshot().run_ids == runs
+    assert labels.latest_snapshot().run_ids == runs
+
+    def state(table):
+        pdf = table.read(spark).toPandas()
+        pdf = pdf.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
+        return pdf.assign(reasons=pdf.reasons.map(tuple))
+
+    pd.testing.assert_frame_equal(state(labels), state(SnapshotTable(ref_dir)))
