@@ -7,8 +7,6 @@ driver).  Names and column aliases MUST match between the two sides — the
 driver compares row count + schema + order-insensitive value hash.
 
 Float-safety conventions used throughout (see tests/test_harness.py):
-- money sums: cast to DECIMAL(18,2/4) first (exact, order-independent),
-  then cast the sum to double — bit-identical on both engines;
 - raw-double sums: integerize first (round(x*1000) -> bigint);
 - any ranking on a float: rank on the ROUNDED value with an id tiebreak.
 """
@@ -17,7 +15,8 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+import pyspark.sql.functions as F
+from pyspark.sql import Column, DataFrame, SparkSession
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
 
@@ -41,13 +40,18 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{table}.parquet")
 
 
+def words_col() -> Column:
+    """``text`` split on single spaces with empty tokens dropped: the word
+    stream every text and dedup query shares (DuckDB side:
+    ``LIST_FILTER(STRING_SPLIT(text, ' '), x -> x != '')``)."""
+    return F.filter(F.split(F.col("text"), " "), lambda x: x != F.lit(""))
+
+
 # Import for registration side effects.
 from moira_spark.harness import (  # noqa: E402,F401
     dedup,
     graph,
     jobs,
-    multimodal,
-    relational,
     similarity,
     streaming,
     text,

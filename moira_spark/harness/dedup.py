@@ -24,7 +24,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from moira_spark.harness import load, register
+from moira_spark.harness import load, register, words_col
 
 _PLANT_EXACT_SQL = """
       SELECT doc_id, text FROM documents
@@ -192,8 +192,7 @@ def _ngram_rows(
     (~1e-6 at 10^7 grams, and scripts/audit_hash_collisions.py verifies
     ZERO collisions for the deterministic fixtures at sf0.001-sf1.0, so
     results are provably identical at every shipped scale)."""
-    w = F.filter(F.split(F.col("text"), " "), lambda x: x != F.lit(""))
-    toks = corpus.select(key, w.alias("w")).filter(F.size("w") >= n)
+    toks = corpus.select(key, words_col().alias("w")).filter(F.size("w") >= n)
     # start positions guarded through slice() so the gram expression is
     # TOTAL (empty array below n words): codegen subexpression elimination
     # can evaluate the generate-inferred size()>0 predicate before the
@@ -695,8 +694,7 @@ def dedup_minhash_lsh(
     from moira_spark.kernels import sketch
 
     corpus = _planted_near(spark, sf_dir)
-    w = F.filter(F.split(F.col("text"), " "), lambda x: x != F.lit(""))
-    toks = corpus.select("doc_id", w.alias("w")).filter(F.size("w") >= 3)
+    toks = corpus.select("doc_id", words_col().alias("w")).filter(F.size("w") >= 3)
     shingle = F.transform(
         F.sequence(F.lit(1), F.size("w") - 2),
         lambda i: F.concat_ws(
@@ -806,8 +804,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from moira_spark.kernels import sketch
 
     corpus = _planted_near(spark, sf_dir)
-    w = F.filter(F.split(F.col("text"), " "), lambda x: x != F.lit(""))
-    th = F.transform(w, lambda t: F.xxhash64(t))
+    th = F.transform(words_col(), lambda t: F.xxhash64(t))
     docs = corpus.select("doc_id", th.alias("th")).filter(F.size("th") >= 1)
 
     @F.pandas_udf("long")
@@ -1861,8 +1858,7 @@ def doc_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.col("text"))
         .alias("text"),
     )
-    w = F.filter(F.split(F.col("text"), " "), lambda x: x != F.lit(""))
-    toks = corpus.select("doc_id", w.alias("w"))
+    toks = corpus.select("doc_id", words_col().alias("w"))
     # r7 changes, same results:
     # - the window travels as an 8-byte hash key through every exchange
     #   (the scale plan the r6 docstring promised).  r7.2: the hash is
@@ -2020,8 +2016,7 @@ def _with_shingle_set(df: DataFrame, out: str = "s") -> DataFrame:
     """Per-row DISTINCT word-3-gram array column — total over short docs
     (< 3 words -> empty array; the slice bound keeps every element_at index
     in range, so no row can throw under ANSI mode)."""
-    w = F.filter(F.split(F.col("text"), " "), lambda x: x != F.lit(""))
-    d = df.withColumn("_w", w)
+    d = df.withColumn("_w", words_col())
     shingles = F.transform(
         F.slice(F.col("_w"), 1, F.greatest(F.size("_w") - 2, F.lit(0))),
         lambda x, i: F.concat_ws(
@@ -2755,7 +2750,7 @@ def dedup_editdist_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
         "text",
         F.length("text").cast("bigint").alias("len"),
         F.transform(
-            F.filter(F.split(F.col("text"), " "), lambda x: x != F.lit("")),
+            words_col(),
             lambda wd: (
                 F.ascii(wd) * 10000
                 + F.ascii(F.substring(wd, -1, 1)) * 100

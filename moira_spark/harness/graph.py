@@ -19,8 +19,7 @@ iteration t's ranks by n*60^t turns the update into
 0.85/3 * 60 = 17, 0.15/n * n*60^(t+1) = 9*60^t).  Every value stays int64
 (total mass is exactly n*60^t <= ~8e15 for n <= 10^7 at t=5), so both
 engines agree bit-for-bit and the driver's value hash is a REAL check of an
-iterative distributed algorithm — same trick family as the fixed-point
-decimal sums in the relational tier.
+iterative distributed algorithm.
 """
 
 from __future__ import annotations

@@ -547,8 +547,7 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     own guarantee, exercised for our state machinery by
     streaming_incremental_dedup's multi-batch harness).
 
-    Scale shape: the streaming symmetric hash join keys state by user_id —
-    the same equi-key the batch twin (events_proximity_join) shuffles on —
+    Scale shape: the streaming symmetric hash join keys state by user_id,
     and the event_type filters are pushed to the parquet scan on both
     sides.
     """

@@ -2,9 +2,9 @@
 length/symbol rules, token counting, stopword/quality scoring, exact
 fingerprinting.  All SQL-expressible -> full DuckDB oracle coverage.
 
-Word definition here is simple single-space splitting (the documents table
-is machine-generated single-spaced text) with empty tokens dropped, mirrored
-exactly on both engines.
+Word definition here is ``harness.words_col``: simple single-space
+splitting (the documents table is machine-generated single-spaced text) with
+empty tokens dropped, mirrored exactly on both engines.
 """
 
 from __future__ import annotations
@@ -16,14 +16,10 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from moira_spark import config
-from moira_spark.harness import load, register
+from moira_spark.harness import load, register, words_col
 
 _STOPWORDS = ("the", "a", "of", "to", "and", "in", "is", "that", "it", "for")
 _STOP_SQL = "', '".join(_STOPWORDS)
-
-
-def _words_col():
-    return F.filter(F.split(F.col("text"), " "), lambda x: x != F.lit(""))
 
 
 # ------------------------------------------------------------ length rule
@@ -44,7 +40,7 @@ def _words_col():
 def doc_length_rule(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     n_chars = F.length("text")
-    n_words = F.size(_words_col()).cast("bigint")
+    n_words = F.size(words_col()).cast("bigint")
     keep = (
         (n_chars >= config.MIN_CHARS)
         & (n_chars <= config.MAX_CHARS)
@@ -83,7 +79,7 @@ def doc_symbol_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz0123456789 "
     )
     n_sym = F.length(F.translate("text", alnum_sp, ""))
-    n_words = F.greatest(F.size(_words_col()), F.lit(1))
+    n_words = F.greatest(F.size(words_col()), F.lit(1))
     return d.select(
         "doc_id",
         n_sym.cast("bigint").alias("n_symbols"),
@@ -108,7 +104,7 @@ def doc_symbol_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def doc_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
-    n_words = F.size(_words_col()).cast("bigint")
+    n_words = F.size(words_col()).cast("bigint")
     return (
         d.withColumn("n_tokens", n_words)
         .groupBy("lang")
@@ -137,7 +133,7 @@ def doc_stopword_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     stops = F.array(*[F.lit(s) for s in _STOPWORDS])
     n_stop = F.size(F.filter(F.split(F.col("text"), " "), lambda x: F.array_contains(stops, x)))
-    n_words = F.greatest(F.size(_words_col()), F.lit(1))
+    n_words = F.greatest(F.size(words_col()), F.lit(1))
     return d.select(
         "doc_id",
         F.round(n_stop.cast("double") / n_words.cast("double"), 6).alias(
@@ -169,7 +165,7 @@ def doc_bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(F.regexp_extract_all("text", F.lit(_BPE_RE), F.lit(0)))
         .cast("bigint")
         .alias("n_bpe_tokens"),
-        F.size(_words_col()).cast("bigint").alias("n_ws_tokens"),
+        F.size(words_col()).cast("bigint").alias("n_ws_tokens"),
     )
 
 
@@ -285,7 +281,7 @@ def doc_gopher_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style quality stats: mean word length + stop-word presence
     (docs lacking >= 2 common stopwords are machine-soup candidates)."""
     d = load(spark, sf_dir, "documents")
-    w = _words_col()
+    w = words_col()
     stops = F.array(*[F.lit(s) for s in _STOPWORDS])
     mean_wl = F.round(
         F.aggregate(w, F.lit(0.0), lambda acc, x: acc + F.length(x).cast("double"))
@@ -574,7 +570,7 @@ def doc_unigram_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
     freq = (
-        d.select("doc_id", F.explode(_words_col()).alias("wd"))
+        d.select("doc_id", F.explode(words_col()).alias("wd"))
         .groupBy("doc_id", "wd")
         .agg(F.count(F.lit(1)).alias("c"))
     )
@@ -912,7 +908,7 @@ def source_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate arithmetic and the keep decision.
     """
     d = load(spark, sf_dir, "documents").select("source", "n_chars", "text")
-    w = _words_col()
+    w = words_col()
     n_words = F.size(w)
     stop_ratio = F.when(
         n_words > 0,
@@ -1012,7 +1008,7 @@ def source_percentile_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     divides identically in both engines' doubles.
     """
     d = load(spark, sf_dir, "documents").select("doc_id", "source", "text")
-    score = F.size(_words_col()).cast("bigint")
+    score = F.size(words_col()).cast("bigint")
     return percentile_gate(d.select("doc_id", "source", score.alias("score")))
 
 
@@ -1114,7 +1110,7 @@ def shard_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     from moira_spark.operators.prefix import running_sum
 
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    n_tokens = F.size(_words_col())
+    n_tokens = F.size(words_col())
     toks = d.select("doc_id", n_tokens.cast("bigint").alias("n_tokens"))
     return running_sum(
         toks, "n_tokens", order_cols=["doc_id"], out_col="cum_tokens"
@@ -1293,7 +1289,7 @@ def corpus_quality_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     stay in exact integer arithmetic.
     """
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    w = _words_col()
+    w = words_col()
     n_tokens = F.size(w).cast("bigint")
     n_stop = F.size(F.filter(w, lambda x: x.isin(*_STOPWORDS))).cast("bigint")
     scored = d.select(
@@ -1461,7 +1457,7 @@ def doc_dsir_weight(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.select(
             "doc_id",
             (F.col("lang") == "en").alias("is_target"),
-            _words_col().alias("words"),
+            words_col().alias("words"),
         )
     )
 
@@ -1535,7 +1531,7 @@ def corpus_to_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz0123456789 "
     )
     n_chars = F.length("text")
-    n_words = F.size(_words_col())
+    n_words = F.size(words_col())
     sym_ratio = F.length(F.translate("text", alnum_sp, "")).cast("double") / (
         F.greatest(n_words, F.lit(1)).cast("double")
     )
@@ -1714,7 +1710,7 @@ def doc_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
     n_docs = d.count()  # scalar aggregate, driver-side by design
     tf = (
-        d.select("doc_id", F.explode(_words_col()).alias("wd"))
+        d.select("doc_id", F.explode(words_col()).alias("wd"))
         .groupBy("doc_id", "wd")
         .agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
     )
@@ -1819,7 +1815,7 @@ def corpus_bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     overflow under ANSI mode at scale.
     """
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    docs = d.select("doc_id", _words_col().alias("w"))
+    docs = d.select("doc_id", words_col().alias("w"))
     tot = docs.agg(
         F.sum(F.size("w")).cast("bigint").alias("u"),
         F.sum(F.greatest(F.size("w") - 1, F.lit(0))).cast("bigint").alias("wn"),
@@ -1964,7 +1960,7 @@ def doc_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     docs = load(spark, sf_dir, "documents")
-    toks = docs.select(F.explode(_words_col()).alias("token"))
+    toks = docs.select(F.explode(words_col()).alias("token"))
 
     def mg(batches):
         counts = pd.Series(dtype="int64")
@@ -2066,7 +2062,7 @@ def lm_bigram_kn(spark: SparkSession, sf_dir: str) -> DataFrame:
     operation tree on both engines, fixed-pointed to 1e-6; the top-k cut
     is total-ordered by (c12 DESC, bigram)."""
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    docs = d.select(_words_col().alias("w"))
+    docs = d.select(words_col().alias("w"))
     pairs = docs.select(
         F.explode(
             F.zip_with(
@@ -2188,7 +2184,7 @@ def doc_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
     n_docs = d.count()  # scalar aggregate, driver-side by design
-    words = d.select("doc_id", F.explode(_words_col()).alias("wd"))
+    words = d.select("doc_id", F.explode(words_col()).alias("wd"))
     tf = words.groupBy("doc_id", "wd").agg(
         F.count(F.lit(1)).cast("bigint").alias("tf")
     )
@@ -2321,7 +2317,7 @@ def doc_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     W, S = 32, 24
     d = load(spark, sf_dir, "documents").select(
-        "doc_id", _words_col().alias("w")
+        "doc_id", words_col().alias("w")
     )
     n = F.size("w").cast("bigint")
     num_chunks = F.when(n <= W, F.lit(1).cast("bigint")).otherwise(
@@ -2526,7 +2522,7 @@ def source_drift_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a NULL text has no length: it is no sample of its source's
     # distribution, and counted in n_s it would cap the source's ECDF below 1
     vals = corpus.filter(F.col("text").isNotNull()).select(
-        "source", F.size(_words_col()).cast("bigint").alias("v")
+        "source", F.size(words_col()).cast("bigint").alias("v")
     )
     out = ks_drift(vals).localCheckpoint(
         eager=True
@@ -2676,7 +2672,7 @@ def boilerplate_prefixes(
     # rows.  Emit NULL explicitly so both sides agree; on the shipped
     # fixtures (no NULL texts) this is provably a no-op (hash-identical,
     # re-verified at sf0.001/sf0.01).
-    words = _words_col()
+    words = words_col()
     prefix = F.when(
         words.isNull(), F.lit(None).cast("string")
     ).otherwise(F.lower(F.concat_ws(" ", F.slice(words, 1, k))))

@@ -69,8 +69,6 @@ def build_session(
         # pipeline in a clean host window: 30k beat 10k on every matched
         # pair (best 3.18s vs 4.04s over 200k turns) — fewer round trips
         # through the scalar-iter UDF stack, same per-executor footprint.
-        # Caveat: binary-heavy stages (multimodal payloads ~100 KB/row)
-        # should set this back down per job — 30k wide rows is gigabytes.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "30000")
         # Scan parallelism floor for small inputs (r7).  With the default
         # openCostInBytes=4m, a single few-MB parquet file splits into 2-4

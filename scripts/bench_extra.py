@@ -25,6 +25,7 @@ def main() -> None:
     names = sys.argv[3:]
 
     import __spark_entry__ as entrymod
+    from bench import WARMUP
     from moira_spark.session import build_session
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -35,7 +36,7 @@ def main() -> None:
         names = list(qs)
 
     # warm-up: codegen + python worker pool
-    qs["q1_pricing_summary"](spark, sf_dir).write.format("noop").mode(
+    qs[WARMUP](spark, sf_dir).write.format("noop").mode(
         "overwrite"
     ).save()
 

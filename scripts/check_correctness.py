@@ -20,10 +20,7 @@ import pandas as pd
 
 # the checkout this script lives in: a copy checks its own code
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents "
-    "embeddings"
-).split()
+TABLES = ("documents", "embeddings", "events")
 
 
 def value_hash(df: pd.DataFrame) -> str:

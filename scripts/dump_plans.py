@@ -18,10 +18,6 @@ sys.path.insert(0, REPO)
 SF_DIR = "/root/testdata/sf0.01"
 
 SELECTED = [
-    "q1_pricing_summary",
-    "q3_top_orders",
-    "q5_region_revenue",
-    "top_customers_having",
     "doc_length_rule",
     "dedup_jaccard_3gram",
     "dedup_jaccard_capped",
@@ -34,10 +30,6 @@ SELECTED = [
     "doc_unigram_entropy",
     "dedup_incremental",
     "doc_span_dedup",
-    "events_asof_join",
-    "events_funnel",
-    "events_retention_cohorts",
-    "events_proximity_join",
     "doc_dsir_weight",
     "dedup_minhash_lsh",
     "dedup_simhash",
@@ -46,8 +38,6 @@ SELECTED = [
     "embedding_ann_ivf",
     "doc_tfidf_topterms",
     "corpus_bigram_pmi",
-    "events_anomaly",
-    "events_bloom_prefilter",
     "corpus_curriculum_buckets",
     "transcripts_pipeline",
     "doc_c4_line_filter",

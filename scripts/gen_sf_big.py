@@ -13,11 +13,9 @@ at-scale measurements need a ~10x input.  This script synthesizes
 - embeddings: 20k fresh unit-norm random 64-dim vectors, labels uniform
   over 10 (sf0.1 has no cluster signal: label-mean norms match the
   1/sqrt(n) null).
-- lineitem/orders/customer/part/supplier/events: the sf0.1 tables
-  replicated 10x with per-replica key offsets (order/cust/part/supp/user
-  keys shifted consistently) so join fan-in and per-key group sizes stay
-  identical and scaling is linear.
-- nation/region: copied.
+- events: the sf0.1 table replicated 10x with per-replica event_id and
+  user_id offsets, so per-user group sizes stay identical and scaling is
+  linear.
 
 Deterministic (seed=4242).  Output is measurement-only scratch — never an
 oracle input; correctness stays pinned to the driver's sf0.001/0.01 data.
@@ -114,24 +112,8 @@ def main() -> None:
     write("documents", gen_documents(rng, 50_000))
     write("embeddings", gen_embeddings(rng, 20_000))
     write(
-        "lineitem",
-        replicate(
-            "lineitem",
-            10,
-            {"l_orderkey": 150_000, "l_partkey": 20_000, "l_suppkey": 1_000},
-        ),
-    )
-    write(
-        "orders", replicate("orders", 10, {"o_orderkey": 150_000, "o_custkey": 15_000})
-    )
-    write("customer", replicate("customer", 10, {"c_custkey": 15_000}))
-    write("part", replicate("part", 10, {"p_partkey": 20_000}))
-    write("supplier", replicate("supplier", 10, {"s_suppkey": 1_000}))
-    write(
         "events", replicate("events", 10, {"event_id": 100_000, "user_id": 1_500})
     )
-    for name in ("nation", "region"):
-        write(name, pq.read_table(f"{SRC}/{name}.parquet").to_pandas())
 
 
 if __name__ == "__main__":

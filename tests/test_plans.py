@@ -52,7 +52,6 @@ CASES = [
     ("transcripts_pipeline", 0, 2, 1, 0),
     ("doc_perplexity", 0, 1, 0, 0),
     ("doc_langid", 0, 1, 0, 0),
-    ("q1_pricing_summary", 0, 0, 0, 1),
     ("embedding_cosine_topk", 0, 0, 0, 1),
     # round 4: capped Jaccard (pure JVM, 4-branch shingle re-expansion is
     # deliberate — persist A/B'd slower, see dedup_jaccard_capped docstring)
@@ -75,9 +74,7 @@ CASES = [
     # round 5: per-source percentile gate — window partitioned BY SOURCE;
     # zero SinglePartition guards against a global-order reformulation
     ("source_percentile_gate", 0, 0, 0, 0),
-    # round 4 late: as-of join (one user_id shuffle + window, pure JVM,
-    # filter pushed to scan) and span dedup (groupBy-min + join, pure JVM)
-    ("events_asof_join", 0, 0, 0, 1),
+    # round 4 late: span dedup (groupBy-min + join, pure JVM)
     ("doc_span_dedup", 0, 0, 0, 1),
     # r7.2: Gopher repetition signals are doc-local — ONE MapInPandas hop
     # computes the integer counts, fractions stay JVM-side; zero joins,
@@ -102,23 +99,6 @@ CASES = [
     # groupBy levels, per-doc totals broadcast back onto the term stream,
     # pure JVM, no global exchange
     ("doc_unigram_entropy", 0, 0, 1, 0),
-    # round 5 second session: funnel — per-stage event_type filters MUST
-    # reach the parquet scans (6 pushed), all joins keyed on user_id
-    ("events_funnel", 0, 0, 2, 6),
-    # round 5 third session: cohort retention — user_id-keyed dedup/groupBy
-    # chain, cohort sizes + offset rollup broadcast back, pure JVM
-    ("events_retention_cohorts", 0, 0, 2, 0),
-    # round 5 third session: bucketed proximity join — both event_type
-    # filters MUST reach the scans (3 incl. the spine re-read); at sf0.001
-    # AQE broadcasts the bucket equi-join and the SortMergeJoin is the
-    # left-outer rejoin onto the error spine (at scale both become
-    # shuffled joins on dense integer keys — either strategy is correct);
-    # nearest-argmin folds into the groupBy
-    ("events_proximity_join", 0, 0, 1, 3),
-    # round 5 third session: hourly anomaly test — two partial-aggregating
-    # groupBys (cells, then per-type stats broadcast back), pure integer
-    # JVM exprs, zero global exchange
-    ("events_anomaly", 0, 0, 1, 2),
     # round 5 third session: DSIR weights — the ONE SinglePartition is the
     # 128-row -> scalar totals aggregate (bounded by bucket count, not
     # data); the log-ratio table joins back as a broadcast; the token
@@ -138,10 +118,6 @@ CASES = [
     # are pure JVM; the global-order window this replaces would plan a
     # SinglePartition exchange over the whole corpus
     ("corpus_curriculum_buckets", 0, 0, 0, 0),
-    # round 5 sixth session: bloom semi-join — the bitmap probe folds into
-    # the scan-side Filter (zero Python), the exact semi join broadcasts,
-    # and the click filter reaches the parquet scan
-    ("events_bloom_prefilter", 0, 0, 1, 1),
     # round 6: KN bigram LM — checkpointed bigram-type frame feeds three
     # aggregations + term-keyed join-backs; top-k must be TakeOrdered
     ("lm_bigram_kn", 0, 0, 0, 0),
@@ -189,23 +165,15 @@ def test_plan_properties(spark, name, max_sp, max_arrow, min_bhj, min_pushed):
     assert _pushed(plan) >= min_pushed, f"{name}: pushed filters missing"
 
 
-@pytest.mark.parametrize("name", ["q1_pricing_summary", "q5_region_revenue"])
-def test_no_sort_merge_join_in_headliners(spark, name):
-    # Small dims must broadcast; a SortMergeJoin in these plans means the
-    # broadcast threshold or an explicit hint regressed.
-    plan = _plan(spark, name)
-    assert "SortMergeJoin" not in plan, plan
-
-
 def test_scan_column_pruning(spark):
-    # q1 projects 6 lineitem columns; the parquet scan must not read more.
-    # (ReadSchema is truncated in toString(), so parse the FileScan column
-    # list instead.)
-    plan = _plan(spark, "q1_pricing_summary")
+    # dedup_exact needs doc_id and text, 2 of the documents table's 5
+    # columns; the parquet scan must not read more.  (ReadSchema is
+    # truncated in toString(), so parse the FileScan column list instead.)
+    plan = _plan(spark, "dedup_exact")
     reads = re.findall(r"FileScan parquet \[([^\]]*)\]", plan)
     assert reads, plan
-    widest = max(len([c for c in r.split(",") if c.strip()]) for r in reads)
-    assert widest <= 8, f"q1 scan reads {widest} columns: {reads}"
+    cols = {c.strip().split("#")[0] for r in reads for c in r.split(",") if c.strip()}
+    assert cols <= {"doc_id", "text"}, f"dedup_exact scans read {sorted(cols)}"
 
 
 def test_incremental_verify_shingles_only_semijoined_history(spark, monkeypatch):

@@ -93,6 +93,16 @@ def test_oracle_sql_tracks_config_overrides():
     assert f"BETWEEN {old} AND" in harness.oracle_sql()["doc_length_rule"]
 
 
+def test_bench_names_are_registered():
+    # bench.py looks each name up in queries(); a name that left the
+    # registry would raise KeyError only at bench time.
+    import bench
+
+    qs = harness.queries()
+    missing = [n for n in bench.HEADLINE + [bench.WARMUP] if n not in qs]
+    assert not missing, f"bench names not in queries(): {missing}"
+
+
 def test_bench_final_line_fits_driver_tail_capture():
     """The driver keeps only the LAST 2,000 characters of bench.py's stdout
     and parses the final line as JSON.  Round 4 broke this silently: the
