@@ -517,6 +517,72 @@ class TestUnigramEntropy:
             kmeans_fit(vecs, k=1, iters=0)
 
 
+class TestTemporalProximityJoin:
+    def _run(self, spark, left, right, w=100):
+        from moira_spark.operators.events import temporal_proximity_join
+
+        l = spark.createDataFrame(left, "left_id long, us long")
+        r = spark.createDataFrame(right, "right_id long, us long")
+        return {
+            row["left_id"]: row
+            for row in temporal_proximity_join(l, r, w).collect()
+        }
+
+    def test_window_boundary_inclusive(self, spark):
+        out = self._run(spark, [(1, 1000)], [(10, 1100), (11, 1101)], w=100)
+        # |dt| == W is inside; W+1 is out
+        assert out[1]["n_within"] == 1
+        assert out[1]["nearest_right_id"] == 10
+        assert out[1]["nearest_dt_us"] == 100
+
+    def test_cross_bucket_pair_meets_exactly_once(self, spark):
+        # left in bucket 9 (us=999), right in bucket 10 (us=1050):
+        # the pair qualifies (dt=51 <= 100) and must be counted ONCE —
+        # the replicate-to-neighbors scheme cannot double-match
+        out = self._run(spark, [(1, 999)], [(10, 1050)], w=100)
+        assert out[1]["n_within"] == 1
+
+    def test_nearest_tie_breaks_to_smaller_right_id(self, spark):
+        out = self._run(spark, [(1, 1000)], [(7, 1005), (3, 995)], w=100)
+        assert out[1]["n_within"] == 2
+        assert out[1]["nearest_dt_us"] == 5
+        assert out[1]["nearest_right_id"] == 3
+
+    def test_left_without_matches_survives_with_zero(self, spark):
+        out = self._run(spark, [(1, 1000), (2, 900_000)], [(10, 1050)], w=100)
+        assert out[2]["n_within"] == 0
+        assert out[2]["nearest_right_id"] is None
+        assert out[2]["nearest_dt_us"] is None
+
+
+class TestRetentionCohorts:
+    def _run(self, spark, rows):
+        from moira_spark.operators.events import retention_cohorts
+
+        df = spark.createDataFrame(rows, "user_id long, day int")
+        return {
+            (r["cohort_day"], r["day_offset"]): r
+            for r in retention_cohorts(df).collect()
+        }
+
+    def test_two_cohorts(self, spark):
+        out = self._run(spark, [(1, 0), (1, 3), (2, 3)])
+        assert set(out) == {(0, 0), (0, 3), (3, 0)}
+        assert out[(0, 0)]["active_users"] == 1
+        assert out[(0, 3)]["active_users"] == 1
+        assert out[(3, 0)]["active_users"] == 1
+        assert out[(0, 0)]["cohort_size"] == 1
+        assert out[(3, 0)]["cohort_size"] == 1
+
+    def test_offset_zero_always_equals_cohort_size(self, spark):
+        out = self._run(spark, [(1, 2), (2, 2), (3, 2), (3, 5)])
+        assert out[(2, 0)]["active_users"] == out[(2, 0)]["cohort_size"] == 3
+
+    def test_same_day_activity_counts_once(self, spark):
+        out = self._run(spark, [(1, 0), (1, 0), (1, 0)])
+        assert out[(0, 0)]["active_users"] == 1
+
+
 class TestDsirWeights:
     def _run(self, spark, rows):
         from moira_spark.harness.text import dsir_weights
@@ -645,6 +711,60 @@ class TestStructureLint:
         assert out["a"]["structure_ok"]
         assert out["b"]["n_role_repeats"] == 1
         assert out["b"]["n_ts_inversions"] == 0
+
+
+class TestBucketCountAnomalies:
+    def _run(self, spark, counts, z2=9):
+        from moira_spark.operators.events import bucket_count_anomalies
+
+        df = spark.createDataFrame(
+            [("g", i, c) for i, c in enumerate(counts)],
+            "grp string, bucket long, c long",
+        )
+        rows = bucket_count_anomalies(df, z2).collect()
+        return {r["bucket"]: r["is_anomaly"] for r in rows}
+
+    def test_matches_float_zscore_closed_form(self, spark):
+        import math
+
+        # Samuelson's inequality caps a single outlier at z^2 = n-1, so a
+        # >3-sigma spike needs n comfortably above 10 — 24 calm hours + 1
+        # spike mirrors the real hourly series shape
+        counts = [10, 11, 9, 12, 10, 10, 11, 9, 10, 12] * 2 + [10, 11, 9, 10, 55]
+        out = self._run(spark, counts)
+        n = len(counts)
+        mean = sum(counts) / n
+        var = sum(c * c for c in counts) / n - mean * mean
+        for i, c in enumerate(counts):
+            expect = (c - mean) ** 2 > 9 * var
+            assert out[i] == expect, (i, c, (c - mean) / math.sqrt(var))
+        assert out[n - 1]  # the spike is > 3 sigma here
+
+    def test_single_outlier_among_identicals_sits_exactly_on_boundary(self, spark):
+        # 9 identical + 1 outlier has z^2 = n-1 = 9 EXACTLY for any
+        # outlier size; strict inequality must not flag it
+        for spike in (100, 1000):
+            out = self._run(spark, [10] * 9 + [spike])
+            assert not any(out.values())
+
+    def test_constant_series_flags_nothing(self, spark):
+        out = self._run(spark, [7] * 24)
+        assert not any(out.values())
+
+    def test_single_bucket_group_not_flagged(self, spark):
+        out = self._run(spark, [999])
+        assert not out[0]
+
+    def test_groups_are_independent(self, spark):
+        from moira_spark.operators.events import bucket_count_anomalies
+
+        calm = [10, 11, 9, 10, 12, 10, 11, 9, 10, 10] * 2
+        rows = [("a", i, c) for i, c in enumerate(calm + [80])]
+        rows += [("b", i, 80) for i in range(5)]  # constant 80s: never anomalous
+        df = spark.createDataFrame(rows, "grp string, bucket long, c long")
+        out = {(r["grp"], r["bucket"]): r["is_anomaly"] for r in bucket_count_anomalies(df).collect()}
+        assert out[("a", 20)]
+        assert not any(v for (g, _), v in out.items() if g == "b")
 
 
 class TestHotClusterCap:

@@ -163,6 +163,66 @@ class TestLshProbeProperties:
                 assert x and (x & (x - 1)) == 0  # exactly one bit flipped
 
 
+def _trunc_div(x: int, w: int) -> int:
+    # Spark's `div` truncates toward zero (python // floors) — mirror it
+    q = abs(x) // w
+    return q if x >= 0 else -q
+
+
+class TestProximityBucketProperties:
+    @DET
+    @given(
+        st.integers(min_value=-(10**15), max_value=10**15),
+        st.integers(min_value=-(10**15), max_value=10**15),
+        st.integers(min_value=1, max_value=10**9),
+    )
+    def test_pairs_within_window_meet_exactly_once(self, x, y, w):
+        """The temporal_proximity_join cover invariant: under truncating
+        bucket division with bucket width == window width, any pair
+        within the window lands in adjacent-or-equal buckets, and the
+        3-replica scheme matches it on exactly one key — even around
+        zero, where truncation makes bucket 0 twice as wide."""
+        bx, by = _trunc_div(x, w), _trunc_div(y, w)
+        replicas = {by - 1, by, by + 1}
+        assert len(replicas) == 3  # distinct keys -> no double match
+        if abs(x - y) <= w:
+            assert bx in replicas, (x, y, w, bx, by)
+
+    @DET
+    @given(
+        st.integers(min_value=-(10**15), max_value=10**15),
+        st.integers(min_value=1, max_value=10**9),
+    )
+    def test_bucket_is_monotone_step(self, x, w):
+        assert _trunc_div(x, w) <= _trunc_div(x + 1, w)
+
+
+class TestAnomalyAlgebraProperties:
+    @DET
+    @given(
+        st.lists(st.integers(min_value=0, max_value=10**6), min_size=1, max_size=40),
+        st.integers(min_value=1, max_value=25),
+    )
+    def test_integer_rewrite_equals_exact_rational_ztest(self, counts, z2):
+        """(c*n - S)^2 > z2*(n*SS - S^2) must agree with the exact
+        rational z^2 > z2 (Fraction arithmetic — float z-scores misjudge
+        boundary cases by construction, e.g. the Samuelson equality)."""
+        from fractions import Fraction
+
+        n = len(counts)
+        S = sum(counts)
+        SS = sum(c * c for c in counts)
+        mean = Fraction(S, n)
+        var = Fraction(SS, n) - mean * mean
+        for c in counts:
+            integer_form = (c * n - S) ** 2 > z2 * (n * SS - S * S)
+            if var == 0:
+                rational_form = False
+            else:
+                rational_form = (c - mean) ** 2 > z2 * var
+            assert integer_form == rational_form, (c, counts, z2)
+
+
 def _drawn(strategy, n):
     """The values a derandomized hypothesis run of ``n`` examples draws
     from ``strategy`` — harvested so one Spark frame can check them all."""
