@@ -223,7 +223,7 @@ def main() -> None:
     # head was truncated, and BENCH_r04 came back "parsed": null — a full
     # round of speedups invisible to the driver.  The final line is now the
     # COMPACT summary only (tests/test_registry.py pins it < 1,900 bytes
-    # with the full headline set); medians + raw runs go to BENCH/ files.
+    # with the full headline set); medians + raw runs go to the detail file.
     result = {
         "metric": "headline_queries_total_wall",
         "value": total,
@@ -236,7 +236,7 @@ def main() -> None:
         "pipeline_median_sec": pipeline_median,
         "turns_per_sec_median": round(n_turns / pipeline_median, 1),
         "host_steal_frac": steal_frac,
-        "detail": "BENCH/bench_runs_latest.json",
+        "detail": ".bench_cache/bench_runs_latest.json",
     }
     detail = {
         **result,
@@ -244,14 +244,11 @@ def main() -> None:
         "query_runs": query_runs,
         "pipeline_runs_sec": pipeline_runs,
     }
-    bench_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH")
-    os.makedirs(bench_dir, exist_ok=True)
-    with open(os.path.join(bench_dir, "bench_runs_latest.json"), "w") as f:
+    # the detail goes to the ignored cache dir, so a run leaves the
+    # checkout clean
+    os.makedirs(CACHE_DIR, exist_ok=True)
+    with open(os.path.join(CACHE_DIR, "bench_runs_latest.json"), "w") as f:
         json.dump(detail, f, indent=1)
-    # accumulating history (like scaling_results.json): round-over-round
-    # medians stay comparable even after _latest is overwritten
-    with open(os.path.join(bench_dir, "bench_runs_history.jsonl"), "a") as f:
-        f.write(json.dumps(detail) + "\n")
     line = json.dumps(result)
     if len(line) >= 1900:  # not assert: must survive python -O
         raise RuntimeError(

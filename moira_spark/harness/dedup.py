@@ -22,7 +22,7 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 
 from moira_spark.harness import load, register, words_col
 
@@ -169,6 +169,30 @@ def _jaccard_ctes_sql(corpus_sql: str, max_df: int | None = None) -> str:
 _JACCARD_PAIR_CTES = _jaccard_ctes_sql(_PLANT_NEAR_SQL)
 
 
+def _gram_starts(w: Column, n: int) -> Column:
+    """1-based start positions of the word n-grams of the token array
+    ``w`` — the one gram-start expression every n-gram builder here uses.
+    Empty below n words, and guarded through slice() so any gram built
+    over it is TOTAL: codegen subexpression elimination can evaluate a
+    generator's inferred size()>0 predicate before a caller's
+    size(w) >= n filter short-circuits, so element_at must never be able
+    to go out of range under ANSI mode (r7 lesson)."""
+    last = F.size(w) - (n - 1)
+    return F.slice(
+        F.sequence(F.lit(1), F.greatest(last, F.lit(1))),
+        1,
+        F.greatest(last, F.lit(0)),
+    )
+
+
+def _gram_strings(w: Column, n: int) -> Column:
+    """The word n-grams of the token array ``w``, space-joined, in order."""
+    return F.transform(
+        _gram_starts(w, n),
+        lambda i: F.concat_ws(" ", *[F.element_at(w, i + k) for k in range(n)]),
+    )
+
+
 def _ngram_rows(
     corpus: DataFrame,
     n: int,
@@ -179,10 +203,10 @@ def _ngram_rows(
 ) -> DataFrame:
     """(<key>, <out>) distinct word-n-gram rows.  All-JVM:
     split/filter/transform/explode, no Python.  Rows shorter than n words
-    contribute no grams (total — the sequence bound keeps every element_at
-    index in range under ANSI mode).  ``dedup=False`` skips the distinct
-    for callers that dedupe later in the plan (after a selective filter,
-    so the exchange carries hits instead of the whole gram stream).
+    contribute no grams (total — see _gram_starts).  ``dedup=False`` skips
+    the distinct for callers that dedupe later in the plan (after a
+    selective filter, so the exchange carries hits instead of the whole
+    gram stream).
 
     ``hashed=True`` (r7) replaces the gram STRING with its xxhash64 — the
     scale form the r6 docstrings promised ("at 100 TB the gram string
@@ -193,23 +217,7 @@ def _ngram_rows(
     ZERO collisions for the deterministic fixtures at sf0.001-sf1.0, so
     results are provably identical at every shipped scale)."""
     toks = corpus.select(key, words_col().alias("w")).filter(F.size("w") >= n)
-    # start positions guarded through slice() so the gram expression is
-    # TOTAL (empty array below n words): codegen subexpression elimination
-    # can evaluate the generate-inferred size()>0 predicate before the
-    # size(w) >= n conjunct short-circuits, so element_at must never be
-    # able to go out of range under ANSI mode (r7 lesson)
-    starts = F.slice(
-        F.sequence(F.lit(1), F.greatest(F.size("w") - (n - 1), F.lit(1))),
-        1,
-        F.greatest(F.size("w") - (n - 1), F.lit(0)),
-    )
-    gram = F.transform(
-        starts,
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(F.col("w"), i + k) for k in range(n)]
-        ),
-    )
-    rows = toks.select(key, F.explode(gram).alias(out))
+    rows = toks.select(key, F.explode(_gram_strings(F.col("w"), n)).alias(out))
     if hashed:
         rows = rows.select(key, F.xxhash64(F.col(out)).alias(out))
     return rows.distinct() if dedup else rows
@@ -691,19 +699,7 @@ def dedup_minhash_lsh(
     cap_hot_shingles; this path costs the explode/agg shuffles the default
     path avoids); off by default for hash-stable driver checks.
     """
-    from moira_spark.kernels import sketch
-
     corpus = _planted_near(spark, sf_dir)
-    toks = corpus.select("doc_id", words_col().alias("w")).filter(F.size("w") >= 3)
-    shingle = F.transform(
-        F.sequence(F.lit(1), F.size("w") - 2),
-        lambda i: F.concat_ws(
-            " ",
-            F.element_at(F.col("w"), i),
-            F.element_at(F.col("w"), i + 1),
-            F.element_at(F.col("w"), i + 2),
-        ),
-    )
     # r7: the shingle STRINGS never leave the row — the persisted frame and
     # the exact-verify joins carry the xxhash64 array instead (~12x fewer
     # bytes per doc through the cache and the two verify shuffles;
@@ -711,81 +707,33 @@ def dedup_minhash_lsh(
     # injective on the fixture gram sets — scripts/audit_hash_collisions.py).
     # The Mersenne reduction for the minhash kernel applies on top, as
     # before (pmod(xxhash64(x), M) unchanged).
-    sh_arr = F.transform(F.array_distinct(shingle), lambda x: F.xxhash64(x))
-    docs = toks.select("doc_id", sh_arr.alias("s"))
+    docs = _with_shingle_set(corpus).select(
+        "doc_id", _hashed(F.col("s")).alias("s")
+    )
     if max_shingle_df is not None:
         sh = docs.select("doc_id", F.explode("s").alias("shingle"))
         sh = cap_hot_shingles(sh, max_shingle_df)
         docs = sh.groupBy("doc_id").agg(F.collect_set("shingle").alias("s"))
-    h_arr = F.transform(F.col("s"), lambda x: F.pmod(x, F.lit(_MERSENNE)))
-    hashed = docs.select("doc_id", "s", h_arr.alias("h"))
-
-    av, bv = sketch.minhash_params(_MINHASH_K)
-
-    @F.pandas_udf("array<long>")
-    def minhash(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for hs in batches:
-            yield pd.Series(sketch.minhash_batch(hs.tolist(), av, bv))
-
     # The signature frame feeds three plan branches (both sides of the
     # band self-join + exact verify); persist at the branch point or every
     # branch re-runs the UDF and re-scans the corpus (scripts/dump_plans.py
     # shows it: unpersisted, the pre-execution plan has 4 ArrowEvalPython
     # nodes).
     # At production scale the equivalent is write-once to a staging table.
-    signed = hashed.select(
-        "doc_id", "s", minhash(F.col("h")).alias("mh")
-    ).persist()
-    rows_per_band = _MINHASH_K // _LSH_BANDS
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(bi).alias("band"),
-                F.xxhash64(
-                    *[
-                        F.element_at(F.col("mh"), bi * rows_per_band + r + 1)
-                        for r in range(rows_per_band)
-                    ]
-                ).alias("sig"),
-            )
-            for bi in range(_LSH_BANDS)
-        ]
-    )
-    banded = signed.select("doc_id", F.explode(bands).alias("b")).select(
-        "doc_id", F.col("b.band").alias("band"), F.col("b.sig").alias("sig")
-    )
-    l, r = banded.alias("l"), banded.alias("r")
-    candidates = (
-        l.join(
-            r,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.sig") == F.col("r.sig"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(
-            F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
+    signed = docs.withColumn("mh", _minhash(F.col("s"))).persist()
     # exact verify on candidates only (shingle sets are per-row arrays —
-    # no collect_set groupBy needed)
-    sets = signed.select("doc_id", "s")
-    sl, sr = sets.alias("sl"), sets.alias("sr")
-    verified = (
-        candidates.join(sl, F.col("doc_a") == F.col("sl.doc_id"))
-        .join(sr, F.col("doc_b") == F.col("sr.doc_id"))
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.size(F.array_intersect("sl.s", "sr.s")).cast("double")
-                / F.size(F.array_union("sl.s", "sr.s")).cast("double"),
-                6,
-            ),
+    # no collect_set groupBy needed); the pair is (earlier, later) id
+    return (
+        _band_candidates(lsh_band_rows(signed))
+        .join(_sets(signed, "new"), "new_id")
+        .join(_sets(signed, "old"), "old_id")
+        .select(
+            F.col("old_id").alias("doc_a"),
+            F.col("new_id").alias("doc_b"),
+            F.round(_set_jaccard("old_s", "new_s"), 6).alias("jaccard"),
         )
         .filter(F.col("jaccard") >= 0.5)
-        .select("doc_a", "doc_b", "jaccard")
     )
-    return verified
 
 
 # ------------------------------------------------------------------ SimHash
@@ -1880,7 +1828,7 @@ def doc_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     #   just to check a bound (guide §1.2: don't compute things you throw
     #   away).  Still a hard fail, now for free on the rows already flowing.
     gram = F.transform(
-        F.sequence(F.lit(1), F.size("w") - (k - 1)),
+        _gram_starts(F.col("w"), k),
         lambda i: F.struct(
             i.alias("s"),
             F.xxhash64(
@@ -2014,25 +1962,22 @@ def _incremental_batches(
 
 def _with_shingle_set(df: DataFrame, out: str = "s") -> DataFrame:
     """Per-row DISTINCT word-3-gram array column — total over short docs
-    (< 3 words -> empty array; the slice bound keeps every element_at index
-    in range, so no row can throw under ANSI mode)."""
+    (< 3 words -> empty array; see _gram_starts)."""
     d = df.withColumn("_w", words_col())
-    shingles = F.transform(
-        F.slice(F.col("_w"), 1, F.greatest(F.size("_w") - 2, F.lit(0))),
-        lambda x, i: F.concat_ws(
-            " ",
-            F.element_at(F.col("_w"), i + 1),
-            F.element_at(F.col("_w"), i + 2),
-            F.element_at(F.col("_w"), i + 3),
-        ),
-    )
+    shingles = _gram_strings(F.col("_w"), 3)
     return d.withColumn(out, F.array_distinct(shingles)).drop("_w")
 
 
-def _make_minhash_udf():
-    """MinHash signature UDF, total over empty shingle lists (NULL out) —
-    the kernel itself keeps its explicit empties-disallowed contract, so
-    the split happens here per Arrow batch."""
+def _hashed(shingles: Column) -> Column:
+    """A shingle-string array as its xxhash64 array (8-byte keys)."""
+    return F.transform(shingles, lambda x: F.xxhash64(x))
+
+
+def _minhash(hashed: Column) -> Column:
+    """The k=64 MinHash signature of an xxhash64 shingle-set array, in one
+    Arrow hop; total over empty sets (NULL out) — the kernel itself keeps
+    its explicit empties-disallowed contract, so the split happens here
+    per Arrow batch."""
     from moira_spark.kernels import sketch
 
     av, bv = sketch.minhash_params(_MINHASH_K)
@@ -2048,21 +1993,17 @@ def _make_minhash_udf():
                 dtype=object,
             )
 
-    return minhash
+    return minhash(F.transform(hashed, lambda x: F.pmod(x, F.lit(_MERSENNE))))
 
 
 def _with_signatures(df: DataFrame) -> DataFrame:
     """Adds (s, fingerprint, mh) per row: distinct shingle set, md5 of text,
     and the k=64 MinHash signature (NULL when the doc has no shingles).
     Single plan branch — one shingle/md5 pass, one Arrow hop."""
-    minhash = _make_minhash_udf()
-    h_arr = F.transform(
-        F.col("s"), lambda x: F.pmod(F.xxhash64(x), F.lit(_MERSENNE))
-    )
     return (
         _with_shingle_set(df)
         .withColumn("fingerprint", F.md5("text"))
-        .withColumn("mh", minhash(h_arr))
+        .withColumn("mh", _minhash(_hashed(F.col("s"))))
     )
 
 
@@ -2093,20 +2034,82 @@ def lsh_band_rows(df: DataFrame) -> DataFrame:
     )
 
 
-def _jaccard_ge_half(pairs: DataFrame) -> DataFrame:
-    """(new_id, old_id, new_s, old_s) candidate pairs -> distinct new_id
-    rows whose word-3-gram Jaccard clears the 0.5 near-dup bar."""
+def _band_candidates(
+    new_bands: DataFrame, old_bands: DataFrame | None = None
+) -> DataFrame:
+    """Distinct (new_id, old_id) pairs whose docs share an LSH band
+    signature.  Without ``old_bands`` the bands are joined to themselves,
+    later id against earlier id (min-id-wins)."""
+    l = new_bands.alias("l")
+    r = (new_bands if old_bands is None else old_bands).alias("r")
+    on = (F.col("l.band") == F.col("r.band")) & (F.col("l.sig") == F.col("r.sig"))
+    if old_bands is None:
+        on = on & (F.col("l.doc_id") > F.col("r.doc_id"))
     return (
-        pairs.withColumn(
-            "jaccard",
-            F.size(F.array_intersect("new_s", "old_s")).cast("double")
-            / F.greatest(
-                F.size(F.array_union("new_s", "old_s")), F.lit(1)
-            ).cast("double"),
+        l.join(r, on)
+        .select(
+            F.col("l.doc_id").alias("new_id"), F.col("r.doc_id").alias("old_id")
         )
-        .filter(F.col("jaccard") >= 0.5)
+        .distinct()
+    )
+
+
+def _sets(df: DataFrame, side: str) -> DataFrame:
+    """(doc_id, s) -> (<side>_id, <side>_s), one side of a verify join."""
+    return df.select(
+        F.col("doc_id").alias(f"{side}_id"), F.col("s").alias(f"{side}_s")
+    )
+
+
+def _set_jaccard(a: str, b: str) -> Column:
+    """Jaccard of two shingle-set array columns."""
+    return F.size(F.array_intersect(a, b)).cast("double") / F.greatest(
+        F.size(F.array_union(a, b)), F.lit(1)
+    ).cast("double")
+
+
+def _jaccard_ge_half(
+    cand: DataFrame, new_sets: DataFrame, old_sets: DataFrame
+) -> DataFrame:
+    """(new_id, old_id) candidate pairs -> distinct new_id rows whose
+    word-3-gram Jaccard against the old doc clears the 0.5 near-dup bar."""
+    return (
+        cand.join(new_sets, "new_id")
+        .join(old_sets, "old_id")
+        .filter(_set_jaccard("new_s", "old_s") >= 0.5)
         .select(F.col("new_id").alias("doc_id"))
         .distinct()
+    )
+
+
+def _flags(
+    batch: DataFrame, near: DataFrame, committed: DataFrame | None = None
+) -> DataFrame:
+    """The one flag assembly of both incremental queries and the streaming
+    twin: (doc_id, fingerprint) batch rows, the near-dup doc_ids and the
+    committed state's fingerprints (None for a first batch) ->
+    (doc_id, dup_exact, dup_near, survives).  dup_exact = fingerprint
+    committed OR a smaller-id twin in the batch (min-id-wins, as in
+    dedup_exact); a doc survives when it is neither an exact nor a near
+    dup."""
+    firsts = batch.groupBy("fingerprint").agg(F.min("doc_id").alias("first_id"))
+    flagged = batch.join(firsts, "fingerprint")
+    in_committed = F.lit(False)
+    if committed is not None:
+        fp = committed.select("fingerprint").distinct().withColumn(
+            "in_committed", F.lit(True)
+        )
+        flagged = flagged.join(fp, "fingerprint", "left")
+        in_committed = F.col("in_committed").isNotNull()
+    near = near.distinct().withColumn("is_near", F.lit(True))
+    is_near = F.col("is_near").isNotNull()
+    return flagged.join(near, "doc_id", "left").select(
+        "doc_id",
+        (in_committed | (F.col("doc_id") > F.col("first_id"))).alias("dup_exact"),
+        is_near.alias("dup_near"),
+        (
+            ~in_committed & (F.col("doc_id") == F.col("first_id")) & ~is_near
+        ).alias("survives"),
     )
 
 
@@ -2155,52 +2158,17 @@ def incremental_flags(
     table's per-batch shuffle footprint becomes O(batch collisions), not
     O(history).  Exact either way (the equi-joins remove the bitmap's
     false positives); flags are identical with it off."""
-    firsts = enriched.groupBy("fingerprint").agg(
-        F.min("doc_id").alias("first_id")
-    )
-    base = enriched.select("doc_id", "fingerprint").join(firsts, "fingerprint")
-
+    batch = enriched.select("doc_id", "fingerprint")
     new_bands = lsh_band_rows(enriched)
-    new_sets = enriched.select(
-        F.col("doc_id").alias("new_id"), F.col("s").alias("new_s")
-    )
+    new_sets = _sets(enriched, "new")
     # intra-batch near pass: band self-join (later id vs earlier id), verify
     # from the batch's own shingle sets — enriched already carries ``s``, so
     # nothing is re-shingled here either
-    cand_intra = (
-        new_bands.alias("l")
-        .join(
-            new_bands.alias("r"),
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.sig") == F.col("r.sig"))
-            & (F.col("l.doc_id") > F.col("r.doc_id")),
-        )
-        .select(
-            F.col("l.doc_id").alias("new_id"), F.col("r.doc_id").alias("old_id")
-        )
-        .distinct()
-    )
-    peer_sets = enriched.select(
-        F.col("doc_id").alias("old_id"), F.col("s").alias("old_s")
-    )
     near_intra = _jaccard_ge_half(
-        cand_intra.join(new_sets, "new_id").join(peer_sets, "old_id")
+        _band_candidates(new_bands), new_sets, _sets(enriched, "old")
     )
-
     if committed is None:
-        return (
-            base.join(
-                near_intra.withColumn("is_near", F.lit(True)), "doc_id", "left"
-            ).select(
-                "doc_id",
-                (F.col("doc_id") > F.col("first_id")).alias("dup_exact"),
-                F.coalesce(F.col("is_near"), F.lit(False)).alias("dup_near"),
-                (
-                    (F.col("doc_id") == F.col("first_id"))
-                    & F.col("is_near").isNull()
-                ).alias("survives"),
-            )
-        )
+        return _flags(batch, near_intra)
 
     committed_fp = committed
     old_bands = (
@@ -2229,21 +2197,7 @@ def incremental_flags(
         committed_fp = committed.filter(
             might_contain(F.col("fingerprint"), fwords)
         )
-    fp = committed_fp.select("fingerprint").distinct().withColumn(
-        "in_committed", F.lit(True)
-    )
-    cand = (
-        new_bands.alias("l")
-        .join(
-            old_bands.alias("r"),
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.sig") == F.col("r.sig")),
-        )
-        .select(
-            F.col("l.doc_id").alias("new_id"), F.col("r.doc_id").alias("old_id")
-        )
-        .distinct()
-    )
+    cand = _band_candidates(new_bands, old_bands)
     # exact verify on candidates only: semi-join committed down to the
     # nominated old_ids FIRST, then recompute shingles from the snapshot's
     # stored text for just those rows.  Anchoring the verify on ``committed``
@@ -2254,34 +2208,9 @@ def incremental_flags(
     committed_cand = committed.select("doc_id", "text").join(
         cand_olds, F.col("doc_id") == F.col("old_id"), "leftsemi"
     )
-    old_sets = _with_shingle_set(committed_cand).select(
-        F.col("doc_id").alias("old_id"), F.col("s").alias("old_s")
-    )
-    near_hist = _jaccard_ge_half(
-        cand.join(new_sets, "new_id").join(old_sets, "old_id")
-    )
-    near = (
-        near_hist.unionAll(near_intra)
-        .distinct()
-        .withColumn("is_near", F.lit(True))
-    )
-    return (
-        base.join(fp, "fingerprint", "left")
-        .join(near, "doc_id", "left")
-        .select(
-            "doc_id",
-            (
-                F.coalesce(F.col("in_committed"), F.lit(False))
-                | (F.col("doc_id") > F.col("first_id"))
-            ).alias("dup_exact"),
-            F.coalesce(F.col("is_near"), F.lit(False)).alias("dup_near"),
-            (
-                F.col("in_committed").isNull()
-                & (F.col("doc_id") == F.col("first_id"))
-                & F.col("is_near").isNull()
-            ).alias("survives"),
-        )
-    )
+    old_sets = _sets(_with_shingle_set(committed_cand), "old")
+    near_hist = _jaccard_ge_half(cand, new_sets, old_sets)
+    return _flags(batch, near_hist.unionAll(near_intra), committed_fp)
 
 
 # Committed batch-1 state, memoized per (sf_dir): the snapshot commit is
@@ -2455,20 +2384,12 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     table, _bands = _committed_state(spark, sf_dir)
     committed = table.read(spark)
 
-    fp1 = (
-        committed.select("fingerprint")
-        .distinct()
-        .withColumn("in_committed", F.lit(True))
-    )
-    b2h = b2.select("doc_id", "text", F.md5("text").alias("h"))
-    firsts = b2h.groupBy("h").agg(F.min("doc_id").alias("first_id"))
-
     # Classic sizes-aggregate-then-join-back shape over HASHED shingle
     # rows (r7: 8-byte keys through every exchange; the carried-size
     # variant A/B'd slower — see _shingle_rows).  No broadcast hints:
-    # sz1/fp1 are COMMITTED-corpus-sized and at 10^12 docs must
-    # shuffle-join on their keys (AQE still broadcasts all of these when
-    # they are small, as in the harness fixtures).
+    # sz1 and the committed fingerprints are COMMITTED-corpus-sized and at
+    # 10^12 docs must shuffle-join on their keys (AQE still broadcasts all
+    # of these when they are small, as in the harness fixtures).
     sh1 = _shingle_rows(committed.select("doc_id", "text"))
     sh2 = _shingle_rows(b2)
     sz1 = sh1.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
@@ -2490,56 +2411,13 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(jac >= 0.5)
         .select(F.col("new_id").alias("doc_id"))
     )
-    # intra-batch near pass: same shingle equi-join, batch against itself,
-    # later id vs earlier id (min-id-wins)
-    inter_b = (
-        sh2.alias("ba")
-        .join(
-            sh2.alias("bb"),
-            (F.col("ba.shingle") == F.col("bb.shingle"))
-            & (F.col("ba.doc_id") > F.col("bb.doc_id")),
-        )
-        .groupBy(
-            F.col("ba.doc_id").alias("new_id"),
-            F.col("bb.doc_id").alias("old_id"),
-        )
-        .agg(F.count(F.lit(1)).alias("i"))
-    )
-    jac_b = F.col("i").cast("double") / (
-        F.col("sa.sz") + F.col("sb.sz") - F.col("i")
-    ).cast("double")
-    near_intra = (
-        inter_b.join(sz2.alias("sa"), F.col("new_id") == F.col("sa.doc_id"))
-        .join(sz2.alias("sb"), F.col("old_id") == F.col("sb.doc_id"))
-        .filter(jac_b >= 0.5)
-        .select(F.col("new_id").alias("doc_id"))
-    )
-    near = (
-        near_hist.unionAll(near_intra)
-        .distinct()
-        .withColumn("is_near", F.lit(True))
-    )
-    flagged = (
-        b2h.join(firsts, "h")
-        .join(
-            fp1,
-            F.col("h") == F.col("fingerprint"),
-            "left",
-        )
-        .join(near, "doc_id", "left")
-        .select(
-            "doc_id",
-            (
-                F.coalesce(F.col("in_committed"), F.lit(False))
-                | (F.col("doc_id") > F.col("first_id"))
-            ).alias("dup_exact"),
-            F.coalesce(F.col("is_near"), F.lit(False)).alias("dup_near"),
-            (
-                F.col("in_committed").isNull()
-                & (F.col("doc_id") == F.col("first_id"))
-                & F.col("is_near").isNull()
-            ).alias("survives"),
-        )
+    # intra-batch near pass: the batch's own Jaccard pairs, later id vs
+    # earlier id (min-id-wins)
+    near_intra = _jaccard_pairs_from(sh2).select(F.col("doc_b").alias("doc_id"))
+    flagged = _flags(
+        b2.select("doc_id", F.md5("text").alias("fingerprint")),
+        near_hist.unionAll(near_intra),
+        committed,
     )
     # localCheckpoint so nothing downstream re-reads the temp snapshot
     # (the memoized state dir is cleaned at process exit)

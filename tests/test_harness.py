@@ -83,6 +83,26 @@ class TestHotShingleCap:
         assert b.equals(c)
 
 
+def test_minhash_lsh_rows_equal_exact_jaccard(spark):
+    """dedup_minhash_lsh (band candidates, then exact verify) returns the
+    same pairs and rounded Jaccard as the shingle equi-join of
+    dedup_jaccard_3gram at sf0.001 (44 rows): every near-dup pair there
+    shares a band.  A df cap far above 2 leaves the result unchanged, as
+    for the shingle join above."""
+    from moira_spark.harness.dedup import dedup_jaccard_3gram, dedup_minhash_lsh
+
+    def rows(df):
+        out = sorted(tuple(r) for r in df.collect())
+        spark.catalog.clearCache()
+        return out
+
+    exact = rows(dedup_jaccard_3gram(spark, "/root/testdata/sf0.001"))
+    assert len(exact) == 44
+    assert rows(dedup_minhash_lsh(spark, "/root/testdata/sf0.001")) == exact
+    capped = dedup_minhash_lsh(spark, "/root/testdata/sf0.001", max_shingle_df=50)
+    assert rows(capped) == exact
+
+
 class TestConnectedComponents:
     def test_chain_needs_multiple_rounds(self, spark):
         """A path graph 1-2-3-4-5 has diameter 4: propagation must iterate,

@@ -150,6 +150,12 @@ CASES = [
     # the checkpointed spread + two sizes join-backs; cap bounds fan-out;
     # NO broadcast hints (corpus-sized sides — AQE decides)
     ("source_overlap_matrix", 0, 0, 0, 0),
+    # MinHash-LSH: the persisted signature frame prints twice per consumer
+    # (4 InMemoryRelation copies x 2); the one real hop is pinned by
+    # test_minhash_signatures_are_persisted below
+    ("dedup_minhash_lsh", 0, 8, 0, 0),
+    # incremental MinHash: checkpointed result, nothing upstream remains
+    ("dedup_incremental_minhash", 0, 0, 0, 0),
 ]
 
 
@@ -163,6 +169,16 @@ def test_plan_properties(spark, name, max_sp, max_arrow, min_bhj, min_pushed):
     bhj = plan.count("BroadcastHashJoin")
     assert bhj >= min_bhj, f"{name}: {bhj} broadcast joins (need >= {min_bhj})"
     assert _pushed(plan) >= min_pushed, f"{name}: pushed filters missing"
+
+
+def test_minhash_signatures_are_persisted(spark):
+    # The signature frame feeds both band self-join sides and the verify;
+    # unpersisted, each branch re-runs the Arrow UDF and re-scans the
+    # corpus, and the pre-execution plan shows 4 hops outside any cache
+    # (fewer than the persisted plan's 8 printed copies, so the CASES
+    # bound alone cannot catch it).
+    plan = _plan(spark, "dedup_minhash_lsh")
+    assert "InMemoryRelation" in plan, plan
 
 
 def test_scan_column_pruning(spark):

@@ -129,10 +129,10 @@ def test_bench_final_line_fits_driver_tail_capture():
         "pipeline_median_sec": 99999.999,
         "turns_per_sec_median": 999999.9,
         "host_steal_frac": 0.9999,
-        "detail": "BENCH/bench_runs_latest.json",
+        "detail": ".bench_cache/bench_runs_latest.json",
     }
     line = json.dumps(worst)
     assert len(line) < 1900, (
         f"compact bench line would be {len(line)} bytes — trim the headline "
-        "set or move more fields into BENCH/bench_runs_latest.json"
+        "set or move more fields into .bench_cache/bench_runs_latest.json"
     )
