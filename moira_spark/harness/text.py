@@ -304,46 +304,6 @@ def doc_gopher_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 _REP_PLANT = " lorem ipsum dolor sit amet"
 
 
-def _gopher_counts_batch(texts) -> "list[tuple[int, int, int, int, int]]":
-    """Per-text Gopher repetition INTEGER counts: (n_words, total_chars,
-    top_chars, dup_chars, d5_chars).  Tokenization must stay bit-compatible
-    with ``F.split(text, ' ')`` + drop-empties (Python str.split(' ')
-    produces the identical empty-token structure).  All outputs are exact
-    integers; every float op (division, round) stays JVM-side so the
-    oracle-checked values are bit-identical to the old all-JVM plan."""
-    from collections import Counter
-
-    out = []
-    for t in texts:
-        w = [x for x in t.split(" ") if x]
-        n = len(w)
-        lens = [len(x) for x in w]
-        total = sum(lens)
-        top = 0
-        if n >= 2:
-            c2 = Counter(zip(w, w[1:]))
-            # cov = cnt * (len(bigram) - 1) = cnt * (len(a) + len(b))
-            top = max(
-                cnt * (len(a) + len(b)) for (a, b), cnt in c2.items()
-            )
-        dup = 0
-        if n:
-            c1 = Counter(w)
-            dup = sum(cnt * len(wd) for wd, cnt in c1.items() if cnt > 1)
-        d5 = 0
-        if n >= 5:
-            grams = [" ".join(w[p : p + 5]) for p in range(n - 4)]
-            c5 = Counter(grams)
-            prev = -1
-            for s, g in enumerate(grams):
-                if c5[g] > 1:
-                    for i in range(max(s, prev + 1), s + 5):
-                        d5 += lens[i]
-                    prev = s + 4
-        out.append((n, total, top, dup, d5))
-    return out
-
-
 def repetition_stats(docs: DataFrame, flag_at: float = 0.2) -> DataFrame:
     """Per-doc Gopher repetition signals over a (doc_id, text) frame:
     top-bigram character coverage, duplicate-word character fraction,
@@ -351,38 +311,29 @@ def repetition_stats(docs: DataFrame, flag_at: float = 0.2) -> DataFrame:
     ``repetitious`` flag at ``flag_at`` top-bigram coverage.
 
     Scale shape (r7.2, guide §4.2): ONE Arrow hop computes all five
-    integer counts per document in a tight batch loop — the whole signal
-    is doc-local, so the r6 shape's five explode -> groupBy passes plus
-    three join-backs (8+ exchanges over the gram streams) bought nothing
-    but shuffle: 13.4s at 10x scale vs 3.3s for this plan (sf0.1:
-    1.85s -> 0.66s, best-of-3).  A pure-JVM doc-local rewrite via higher-order
-    functions was tried first and measured WORSE than the exchanges
-    (interpreted lambda evaluation re-computes every nested array
-    subexpression per element; 1.5s at sf0.1 for one branch alone).
+    integer counts per document (``kernels.text.gopher_counts``) — the
+    whole signal is doc-local, so the r6 shape's five explode -> groupBy
+    passes plus three join-backs (8+ exchanges over the gram streams)
+    bought nothing but shuffle: 13.4s at 10x scale vs 3.3s for this plan
+    (sf0.1: 1.85s -> 0.66s, best-of-3).  A pure-JVM doc-local rewrite via
+    higher-order functions was tried first and measured WORSE than the
+    exchanges (interpreted lambda evaluation re-computes every nested
+    array subexpression per element; 1.5s at sf0.1 for one branch alone).
     Fractions stay JVM-side as exact-integer ratios rounded to 6dp, so
     the oracle hash is unchanged.  Only (doc_id, text) crosses the
     boundary (guide §4.1: project before an opaque op)."""
-    fields = [
-        ("n_words", "n"),
-        ("total_chars", "total"),
-        ("top_chars", "top"),
-        ("dup_chars", "dup"),
-        ("d5_chars", "d5"),
-    ]
-    schema = "doc_id long, " + ", ".join(f"{f} long" for f, _ in fields)
+    fields = ["n_words", "total_chars", "top_chars", "dup_chars", "d5_chars"]
+    schema = "doc_id long, " + ", ".join(f"{f} long" for f in fields)
 
     def counts(batches):
-        import pandas as pd
+        from moira_spark.kernels.text import gopher_counts
 
         for pdf in batches:
-            rows = _gopher_counts_batch(pdf["text"].tolist())
+            rows = gopher_counts(pdf["text"].tolist())
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"].to_numpy(),
-                    **{
-                        f: [r[i] for r in rows]
-                        for i, (f, _) in enumerate(fields)
-                    },
+                    **{f: [r[i] for r in rows] for i, f in enumerate(fields)},
                 }
             )
 
@@ -494,11 +445,9 @@ def doc_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-bigram coverage crosses the Gopher 0.20 bar are flagged
     ``repetitious`` (boilerplate/template pages, looped generation).
 
-    Scale shape: two explode -> algebraic groupBy passes (map-side partial
-    aggregation on (doc_id, gram)), everything codegen — no Python, no
-    window.  The explode fan-out is linear in corpus token count and the
-    (doc_id, gram) keys are near-unique, so partial aggregation collapses
-    them before the shuffle.  Fractions are integer-count ratios computed
+    Scale shape: ``repetition_stats`` — one Arrow hop per batch of
+    documents counts the integers (``kernels.text.gopher_counts``), no
+    shuffle, no window.  Fractions are integer-count ratios computed
     identically on both engines (exact bigint counts -> one double
     division -> round 6), and the flag thresholds the ROUNDED value so the
     boundary can never drift between engines.
@@ -1654,6 +1603,21 @@ def doc_quality_model(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ------------------------------------------------- corpus term statistics
+def _word_bigrams(docs: DataFrame) -> DataFrame:
+    """(w1, w2) rows: every adjacent pair of the word array ``w``, the one
+    bigram stream of ``corpus_bigram_pmi`` and ``lm_bigram_kn`` (the
+    ``slice`` lengths stay >= 0, so a 0- or 1-word doc yields no rows)."""
+    return docs.select(
+        F.explode(
+            F.zip_with(
+                F.expr("slice(w, 1, greatest(size(w) - 1, 0))"),
+                F.expr("slice(w, 2, greatest(size(w) - 1, 0))"),
+                lambda x, y: F.struct(x.alias("w1"), y.alias("w2")),
+            )
+        ).alias("p")
+    ).select("p.w1", "p.w2")
+
+
 @register(
     "doc_tfidf_topterms",
     """
@@ -1826,15 +1790,7 @@ def corpus_bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("wd")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     )
-    pairs = docs.select(
-        F.explode(
-            F.zip_with(
-                F.expr("slice(w, 1, greatest(size(w) - 1, 0))"),
-                F.expr("slice(w, 2, greatest(size(w) - 1, 0))"),
-                lambda x, y: F.struct(x.alias("w1"), y.alias("w2")),
-            )
-        ).alias("p")
-    ).select("p.w1", "p.w2")
+    pairs = _word_bigrams(docs)
     bi = (
         pairs.groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).cast("bigint").alias("cxy"))
@@ -2063,15 +2019,7 @@ def lm_bigram_kn(spark: SparkSession, sf_dir: str) -> DataFrame:
     is total-ordered by (c12 DESC, bigram)."""
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
     docs = d.select(words_col().alias("w"))
-    pairs = docs.select(
-        F.explode(
-            F.zip_with(
-                F.expr("slice(w, 1, greatest(size(w) - 1, 0))"),
-                F.expr("slice(w, 2, greatest(size(w) - 1, 0))"),
-                lambda x, y: F.struct(x.alias("w1"), y.alias("w2")),
-            )
-        ).alias("p")
-    ).select("p.w1", "p.w2")
+    pairs = _word_bigrams(docs)
     bi = (
         pairs.groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c12"))

@@ -1,4 +1,5 @@
-"""Heuristic text-statistics kernels (length / symbol / repetition rules).
+"""Heuristic text-statistics kernels (length / symbol / repetition rules)
+and the Gopher repetition counts behind ``doc_repetition_stats``.
 
 These mirror moira's cheap per-read gates (ambig-base count, --truncate
 length gate; reference moira.py [M], reconstructed — /root/reference empty,
@@ -82,6 +83,13 @@ def dup_line_char_frac(text: str) -> float:
     return dup / total
 
 
+def ngrams(toks: list[str], n: int):
+    """Word n-grams of ``toks`` as tuples, in position order: a ``zip``
+    over ``n`` shifted slices.  The one gram iterator — the repetition
+    rule and the Gopher counts both count its output with a ``Counter``."""
+    return zip(*[toks[i:] for i in range(n)])
+
+
 def top_ngram_stats(
     toks: list[str], n: int, total_chars: int
 ) -> tuple[float, bool]:
@@ -93,13 +101,7 @@ def top_ngram_stats(
     n_grams = len(toks) - n + 1
     if n_grams < 1:
         return 0.0, False
-    if n == 2:
-        grams = zip(toks, toks[1:])
-    elif n == 3:
-        grams = zip(toks, toks[1:], toks[2:])
-    else:
-        grams = zip(toks, toks[1:], toks[2:], toks[3:])
-    counts = Counter(grams)
+    counts = Counter(ngrams(toks, n))
     # a repeat exists iff some gram collapsed: O(1) vs scanning items()
     if len(counts) == n_grams:
         return 0.0, False
@@ -115,15 +117,9 @@ def top_ngram_stats(
 
 
 def repetition_rule_fails(text: str) -> bool:
-    """Per-text implementation.
-
-    NOTE: a fully numpy-vectorized batch twin (lexsort run-length n-gram
-    counting) was built and measured 9x SLOWER than this loop on this
-    sandbox host — its memory subsystem penalizes multi-pass large-array
-    work far more than cache-resident interpreter loops (see
-    BENCH/BASELINE.md controls).  On bandwidth-healthy hardware the
-    vectorized variant wins; revisit if the execution host changes.
-    """
+    """The per-turn repetition rule: duplicated-line character fraction,
+    then the top repeated 2/3/4-gram cascade.  Tokens split on ASCII
+    whitespace, like the JVM length and symbol rules."""
     toks = words(text)
     if len(toks) < config.MIN_WORDS_FOR_REPETITION:
         return False
@@ -150,3 +146,43 @@ def repetition_flags(texts: "list[str] | np.ndarray") -> np.ndarray:
     return np.fromiter(
         (repetition_rule_fails(t) for t in texts), dtype=bool, count=len(texts)
     )
+
+
+def gopher_counts(texts) -> "list[tuple[int, int, int, int, int]]":
+    """Per-text Gopher repetition INTEGER counts: (n_words, total_chars,
+    top_chars, dup_chars, d5_chars) — the top-bigram cover, the chars in
+    repeated words, and the chars under the union of repeated-5-gram
+    spans.  Tokens split on single spaces with empties dropped, exactly
+    like the DuckDB oracle's ``STRING_SPLIT(text, ' ')`` + filter (NOT the
+    rule's ASCII-whitespace split).  A token holds no space, so a 5-gram's
+    tuple key is as injective as its space-joined string.  All outputs
+    are exact integers; every float op (division, round) stays JVM-side
+    in ``harness.text.repetition_stats``."""
+    out = []
+    for t in texts:
+        w = [x for x in t.split(" ") if x]
+        n = len(w)
+        lens = [len(x) for x in w]
+        total = sum(lens)
+        top = 0
+        if n >= 2:
+            # cov = cnt * (len(bigram) - 1) = cnt * (len(a) + len(b))
+            top = max(
+                cnt * (len(a) + len(b))
+                for (a, b), cnt in Counter(ngrams(w, 2)).items()
+            )
+        dup = 0
+        if n:
+            dup = sum(cnt * len(wd) for wd, cnt in Counter(w).items() if cnt > 1)
+        d5 = 0
+        if n >= 5:
+            grams = list(ngrams(w, 5))
+            c5 = Counter(grams)
+            prev = -1
+            for s, g in enumerate(grams):
+                if c5[g] > 1:
+                    for i in range(max(s, prev + 1), s + 5):
+                        d5 += lens[i]
+                    prev = s + 4
+        out.append((n, total, top, dup, d5))
+    return out

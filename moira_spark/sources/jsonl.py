@@ -13,10 +13,10 @@ out), wrapped with the two decisions that matter at scale baked in:
    (the audit-sink pattern), while ``mode='FAILFAST'`` is one argument
    away when ingest must be strict.
 
-The writer mirrors the shard-packing conventions of write_fastq: explicit
-shard count (round-robin repartition, balanced files regardless of
-upstream skew), optional within-shard ordering for reproducible diffs,
-and gzip by default because text shards are cold storage.
+The writer packs shards with an explicit shard count (round-robin
+repartition, balanced files regardless of upstream skew), optional
+within-shard ordering for reproducible diffs, and gzip by default
+because text shards are cold storage.
 """
 
 from __future__ import annotations

@@ -10,7 +10,8 @@ snapshot protocol the batch job uses, which gives the stream replay
 idempotence for free (a checkpoint-replayed micro-batch sees its run_id
 already committed and skips — the same guard as streaming/stream_filter).
 
-Flag semantics per batch (matches harness/dedup.py dedup_incremental):
+Flag semantics per batch (harness/dedup.py ``incremental_flags``, whose
+flag assembly dedup_incremental shares):
 - dup_exact: fingerprint present in committed state, OR an earlier
   (smaller doc_id) twin within this batch;
 - dup_near:  word-3-gram Jaccard >= 0.5 against a committed doc OR against
@@ -33,28 +34,15 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 
-def flag_batch(
-    spark: SparkSession,
-    enriched: DataFrame,
-    committed: DataFrame | None,
-    committed_bands: DataFrame | None = None,
-) -> DataFrame:
-    """(doc_id, text, s, fingerprint, mh) batch + committed state (same
-    schema or None) + optional persisted (doc_id, band, sig) band rows ->
-    per-doc flags (doc_id, dup_exact, dup_near, survives).  Thin delegate
-    to harness.dedup.incremental_flags — ONE definition for the batch and
-    streaming twins, so the banding scheme, the jaccard >= 0.5 verify, and
-    the survives predicate cannot diverge."""
-    from moira_spark.harness.dedup import incremental_flags
-
-    return incremental_flags(enriched, committed, committed_bands)
-
-
 def make_batch_handler(spark: SparkSession, state_dir: str, out_dir: str):
     """The foreachBatch handler, exposed so tests can drive it directly
     (including replaying a batch id, which foreachBatch's at-least-once
     contract allows at any time)."""
-    from moira_spark.harness.dedup import _with_signatures, lsh_band_rows
+    from moira_spark.harness.dedup import (
+        _with_signatures,
+        incremental_flags,
+        lsh_band_rows,
+    )
     from moira_spark.operators.components import _free_checkpoint
     from moira_spark.sources.tableio import SnapshotTable
 
@@ -102,7 +90,7 @@ def make_batch_handler(spark: SparkSession, state_dir: str, out_dir: str):
                     bands.stage(lsh_band_rows(missing), backfill_id)
                 bands.commit(spark, backfill_id, committed_keys=sorted(state_runs))
             committed_bands = bands.read(spark)
-        flags = flag_batch(spark, enriched, committed, committed_bands)
+        flags = incremental_flags(enriched, committed, committed_bands)
         flags = flags.withColumn("batch_id", F.lit(batch_id).cast("long"))
         flags = flags.localCheckpoint(eager=True)  # pin before state advances
         survivors = enriched.join(

@@ -96,7 +96,7 @@ def main() -> int:
             )
         )
         from moira_spark.harness.dedup import _SUBSTR_BOILER, _SUBSTR_K
-        from moira_spark.harness.text import _OVL_PLANT, _REP_PLANT
+        from moira_spark.harness.text import _OVL_PLANT
 
         ovl = d.select(
             "doc_id",
@@ -112,15 +112,6 @@ def main() -> int:
                 F.concat(F.col("text"), F.lit(" " + _SUBSTR_BOILER)),
             ).otherwise(F.col("text")).alias("text"),
         )
-        rep = d.select(
-            "doc_id",
-            F.when(
-                F.col("doc_id") % 13 == 0,
-                F.concat(F.col("text"), F.expr(f"repeat('{_REP_PLANT}', 10)")),
-            ).otherwise(F.col("text")).alias("text"),
-        )
-        del rep  # doc_repetition_stats stopped hashing grams in r7.2
-        # (its counts are doc-local in one Arrow hop — no join keys at all)
         cases = [
             ("3gram_near", _planted_near(spark, sf), 3, False),
             ("3gram_exact", _planted_exact(spark, sf), 3, False),

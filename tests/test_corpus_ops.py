@@ -248,9 +248,9 @@ class TestRepetitionStats:
         # kernel; pin the pure-Python function directly, including the
         # split-on-single-space parity (double space -> empty token
         # dropped, exactly like F.split(text, ' ') + filter)
-        from moira_spark.harness.text import _gopher_counts_batch
+        from moira_spark.kernels.text import gopher_counts
 
-        (a, b, c) = _gopher_counts_batch(
+        (a, b, c) = gopher_counts(
             ["x  y x", "", "q w q w q w q w q w"]
         )
         # 'x  y x': words [x, y, x]; no repeated bigram ('x y' != 'y x'),

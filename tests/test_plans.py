@@ -239,8 +239,12 @@ def test_pipeline_uses_one_python_runtime_per_stage(spark):
     # vectorized Arrow stage (two plan appearances = the persisted branch
     # consumed by good-rows and audit); row-at-a-time PythonUDF must never
     # appear anywhere.
+    # With persist() dropped the plan still shows 2 ArrowEvalPython (each
+    # consumer recomputes the stage), inside CASES' bound of 2, so the
+    # cached branch is pinned by its InMemoryRelation instead.
     plan = _plan(spark, "transcripts_pipeline")
     assert "BatchEvalPython" not in plan, "row-at-a-time Python UDF in plan"
+    assert "InMemoryRelation" in plan, "scored turns no longer persisted"
 
 
 # Round-6 (verdict item 2): no broadcast HINT may sit on a corpus-derived

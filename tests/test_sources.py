@@ -1,5 +1,6 @@
-"""FASTQ and JSONL source/sink round-trips, split-boundary framing, and
-corrupt-record surfacing (moira_spark/sources/fastq.py, jsonl.py)."""
+"""JSONL source/sink round-trips and corrupt-record surfacing
+(moira_spark/sources/jsonl.py), plus driver.py's export and maintenance
+paths."""
 
 from __future__ import annotations
 
@@ -9,102 +10,12 @@ import os
 
 import pytest
 
-from moira_spark.sources.fastq import phred_error_probs, read_fastq, write_fastq
 from moira_spark.sources.jsonl import (
     CORRUPT_COL,
     corrupt_line_count,
     read_jsonl,
     write_jsonl,
 )
-
-
-def _reads(spark, n=5):
-    rows = [(f"r{i:03d}", "ACGT" * (i + 1), "IIII" * (i + 1)) for i in range(n)]
-    return spark.createDataFrame(rows, "read_id string, seq string, quals string")
-
-
-class TestFastq:
-    def test_round_trip(self, spark, tmp_path):
-        path = str(tmp_path / "rt")
-        write_fastq(_reads(spark), path, shards=2)
-        back = read_fastq(spark, path)
-        rows = back.collect()
-        assert len(rows) == 5
-        assert not any(r["corrupt"] for r in rows)
-        got = {(r["read_id"], r["seq"], r["quals"]) for r in rows}
-        want = {(r["read_id"], r["seq"], r["quals"]) for r in _reads(spark).collect()}
-        assert got == want
-
-    def test_split_boundaries_never_corrupt_frames(self, spark, tmp_path):
-        # one larger file forced into many byte-range splits: records
-        # straddle split boundaries, framing must hold (the module's core
-        # contract)
-        p = tmp_path / "big.fastq"
-        n = 400
-        with open(p, "w") as f:
-            for i in range(n):
-                f.write(f"@read{i}\n{'ACGTACGT' * 5}\n+\n{'F' * 40}\n")
-        out = read_fastq(spark, str(p), min_partitions=16)
-        rows = out.collect()
-        assert len(rows) == n
-        assert not any(r["corrupt"] for r in rows)
-        assert {r["read_id"] for r in rows} == {f"read{i}" for i in range(n)}
-        # rec_no is the stable ingest order
-        by_no = sorted(rows, key=lambda r: r["rec_no"])
-        assert [r["read_id"] for r in by_no[:3]] == ["read0", "read1", "read2"]
-
-    def test_multi_file_framing(self, spark, tmp_path):
-        d = tmp_path / "many"
-        d.mkdir()
-        for fn, ids in [("a.fastq", ["a1", "a2"]), ("b.fastq", ["b1"])]:
-            with open(d / fn, "w") as f:
-                for rid in ids:
-                    f.write(f"@{rid}\nACGT\n+\nIIII\n")
-        rows = read_fastq(spark, str(d)).collect()
-        assert {r["read_id"] for r in rows} == {"a1", "a2", "b1"}
-        assert not any(r["corrupt"] for r in rows)
-
-    def test_corrupt_records_flagged_not_fatal(self, spark, tmp_path):
-        p = tmp_path / "bad.fastq"
-        with open(p, "w") as f:
-            f.write("@ok\nACGT\n+\nIIII\n")      # clean
-            f.write("@mismatch\nACGT\n+\nIII\n")  # qual length != seq length
-            f.write("BADHDR\nACGT\n+\nIIII\n")    # header missing '@'
-            f.write("@truncated\nACG\n")          # torn trailing record
-        rows = {r["read_id"]: r for r in read_fastq(spark, str(p)).collect()}
-        assert not rows["ok"]["corrupt"]
-        assert rows["mismatch"]["corrupt"]
-        assert rows["BADHDR"]["corrupt"]
-        assert rows["truncated"]["corrupt"]
-
-    def test_description_split(self, spark, tmp_path):
-        p = tmp_path / "desc.fastq"
-        with open(p, "w") as f:
-            f.write("@r1 first description here\nAC\n+\nII\n")
-            f.write("@r2\nAC\n+\nII\n")
-        rows = {r["read_id"]: r for r in read_fastq(spark, str(p)).collect()}
-        assert rows["r1"]["description"] == "first description here"
-        assert rows["r2"]["description"] is None
-
-    def test_description_round_trips_through_writer(self, spark, tmp_path):
-        df = spark.createDataFrame(
-            [("r1", "note here", "ACGT", "IIII")],
-            "read_id string, description string, seq string, quals string",
-        )
-        path = str(tmp_path / "desc_rt")
-        write_fastq(df, path)
-        row = read_fastq(spark, path).collect()[0]
-        assert row["read_id"] == "r1" and row["description"] == "note here"
-
-    def test_phred_error_probs(self, spark):
-        import pyspark.sql.functions as F
-
-        df = spark.createDataFrame([("I!",)], "quals string")
-        probs = df.select(phred_error_probs(F.col("quals")).alias("p")).collect()[0][
-            "p"
-        ]
-        assert probs[0] == pytest.approx(1e-4)  # 'I' = Q40
-        assert probs[1] == pytest.approx(1.0)   # '!' = Q0
 
 
 class TestJsonl:
